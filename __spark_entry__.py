@@ -1920,14 +1920,9 @@ def _lr_pieces(spark, sf_dir, need_feat: bool = True, retrain: bool = False):
 
     def build_feat():
         docs = spread(_t(spark, sf_dir, "documents"))
-        # pre-partition the design matrix on the per-document key the
-        # trainer/scorer aggregate and join by (r13, guide §2.4): the
-        # per-step (id, y) logit agg and the probs⋈feat join then run
-        # exchange-free off the checkpoint — only the dim+1-row slot
-        # agg still shuffles (map-side combined)
         return docs, lr_gram_features(
             docs, F.col("text").contains("spark"), dim=_LR_DIM, n=_LR_N
-        ).repartition(F.col("id")).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
 
     feat = None
     if retrain or sf_dir not in _LR_MEMO:

@@ -36,6 +36,8 @@ reproduced exactly by the spec-flip in ``sort``.
 from __future__ import annotations
 
 import enum
+import importlib
+import inspect
 from dataclasses import dataclass
 from typing import Callable, Iterable, Sequence
 
@@ -850,17 +852,12 @@ class KevinFrame:
 
     # ------------------------------------------------------------------ #
     # extension-operator surface: the pipeline ops as frame methods, so a
-    # reference user gets ONE coherent API (frame in, frame out).  Each
-    # delegates to the tested operator module; outputs are unordered
-    # analytic results (scale mode).
+    # reference user gets ONE coherent API (frame in, frame out).  Plain
+    # pass-throughs are generated from ``_OPERATOR_METHODS`` below; the
+    # methods here are the ones that are not: their own implementation,
+    # a reordered signature, ``self`` not first, or a list of frames.
+    # Outputs are unordered analytic results (scale mode).
     # ------------------------------------------------------------------ #
-
-    def describe(self, cols: list[str] | None = None) -> "KevinFrame":
-        """Numeric column profile (count/nulls/min/max/mean/std) in one
-        aggregation over one scan — see ``operators.stats.profile_numeric``."""
-        from kevinlang_spark.operators.stats import profile_numeric
-
-        return KevinFrame.from_df(profile_numeric(self._df, cols), ordered=False)
 
     def dedup_exact(
         self, text_col: str = "text", id_col: str = "doc_id"
@@ -882,20 +879,6 @@ class KevinFrame:
         )
         return KevinFrame.from_df(deduped, ordered=False)
 
-    def with_text_stats(self, text_col: str = "text") -> "KevinFrame":
-        """Attach language/quality/token/fingerprint columns (narrow,
-        scan-stage) — see ``operators.text.with_text_stats``."""
-        from kevinlang_spark.operators.text import with_text_stats as _wts
-
-        return KevinFrame.from_df(_wts(self._df, text_col), ordered=False)
-
-    def validate(self, checks) -> "KevinFrame":
-        """Run data-quality checks (one aggregation for all rules) — see
-        ``operators.quality.validate``."""
-        from kevinlang_spark.operators.quality import validate as _validate
-
-        return KevinFrame.from_df(_validate(self._df, checks), ordered=False)
-
     def dedup_lines(
         self, text_col: str = "text", id_col: str = "doc_id", sep: str = "\n"
     ) -> "KevinFrame":
@@ -906,585 +889,6 @@ class KevinFrame:
         return KevinFrame.from_df(
             line_dedup(self._df, id_col, text_col, sep), ordered=False
         )
-
-    def dedup_semantic(
-        self,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        bits: int = 8,
-        threshold: float = 0.9,
-    ) -> "KevinFrame":
-        """SemDeDup-style semantic dedup over an embedding column — see
-        ``operators.similarity.semantic_dedup``."""
-        from kevinlang_spark.operators.similarity import semantic_dedup
-
-        return KevinFrame.from_df(
-            semantic_dedup(self._df, vec_col, id_col, bits, threshold),
-            ordered=False,
-        )
-
-    def association_rules(
-        self,
-        basket_col: str,
-        item_col: str,
-        min_support: int = 2,
-        max_basket_size: int | None = None,
-    ) -> "KevinFrame":
-        """Market-basket A→B rules with support/confidence/lift — see
-        ``operators.baskets.association_rules``."""
-        from kevinlang_spark.operators.baskets import association_rules as _ar
-
-        return KevinFrame.from_df(
-            _ar(self._df, basket_col, item_col, min_support, max_basket_size),
-            ordered=False,
-        )
-
-    def apply_cdc(
-        self,
-        log: "KevinFrame",
-        key_cols: list[str],
-        seq_col: str,
-        op_col: str,
-        delete_op: str = "D",
-    ) -> "KevinFrame":
-        """Apply an insert/update/delete change log to this snapshot —
-        see ``operators.incremental.apply_cdc``."""
-        from kevinlang_spark.operators.incremental import apply_cdc as _cdc
-
-        other = log._df if isinstance(log, KevinFrame) else log
-        return KevinFrame.from_df(
-            _cdc(self._df, other, key_cols, seq_col, op_col, delete_op),
-            ordered=False,
-        )
-
-    def target_encode(
-        self, cat_col: str, target_col: str, alpha: float = 10.0
-    ) -> "KevinFrame":
-        """Smoothed mean target encoding per category — see
-        ``operators.stats.target_encode``."""
-        from kevinlang_spark.operators.stats import target_encode as _te
-
-        return KevinFrame.from_df(
-            _te(self._df, cat_col, target_col, alpha), ordered=False
-        )
-
-    def time_decayed_agg(
-        self,
-        ref_ts: str,
-        half_life_hours: float = 168.0,
-        key_col: str = "user_id",
-        ts_col: str = "ts",
-        value_col: str = "value",
-    ) -> "KevinFrame":
-        """Exponentially time-decayed per-key feature aggregates — see
-        ``operators.events.time_decayed_agg``."""
-        from kevinlang_spark.operators.events import time_decayed_agg as _tda
-
-        return KevinFrame.from_df(
-            _tda(self._df, ref_ts, half_life_hours, key_col, ts_col, value_col),
-            ordered=False,
-        )
-
-    def poisson_bootstrap(
-        self, value_col: str, id_col: str, n_boot: int = 32
-    ) -> "KevinFrame":
-        """Poisson-bootstrap CI of the mean — see
-        ``operators.stats.poisson_bootstrap``."""
-        from kevinlang_spark.operators.stats import poisson_bootstrap as _pb
-
-        return KevinFrame.from_df(
-            _pb(self._df, value_col, id_col, n_boot), ordered=False
-        )
-
-    def psi_drift(
-        self,
-        value_col: str,
-        arm_col: str,
-        expected: str,
-        actual: str,
-        lo: float,
-        hi: float,
-        nbins: int = 10,
-    ) -> "KevinFrame":
-        """PSI distribution drift between two arms — see
-        ``operators.drift.psi_drift``."""
-        from kevinlang_spark.operators.drift import psi_drift as _psi
-
-        return KevinFrame.from_df(
-            _psi(self._df, value_col, arm_col, expected, actual, lo, hi, nbins),
-            ordered=False,
-        )
-
-    def group_ols(self, key_col: str, x_col: str, y_col: str) -> "KevinFrame":
-        """Per-group closed-form OLS — see ``operators.stats.group_ols``."""
-        from kevinlang_spark.operators.stats import group_ols as _ols
-
-        return KevinFrame.from_df(
-            _ols(self._df, key_col, x_col, y_col), ordered=False
-        )
-
-    def k_anonymity(self, quasi_cols: list[str], k: int = 5) -> "KevinFrame":
-        """k-anonymity re-identification risk audit — see
-        ``operators.quality.k_anonymity``."""
-        from kevinlang_spark.operators.quality import k_anonymity as _ka
-
-        return KevinFrame.from_df(
-            _ka(self._df, quasi_cols, k), ordered=False
-        )
-
-    def cusum_changepoints(
-        self,
-        key_col: str = "user_id",
-        ts_col: str = "ts",
-        value_col: str = "value",
-        drift: float = 0.0,
-        threshold_sd: float = 5.0,
-    ) -> "KevinFrame":
-        """CUSUM change-point screen per series — see
-        ``operators.anomaly.cusum_changepoints``."""
-        from kevinlang_spark.operators.anomaly import cusum_changepoints as _cc
-
-        return KevinFrame.from_df(
-            _cc(self._df, key_col, ts_col, value_col, drift, threshold_sd),
-            ordered=False,
-        )
-
-    def seasonal_anomalies(
-        self,
-        key_col: str = "event_type",
-        ts_col: str = "ts",
-        value_col: str = "value",
-        n_sd: float = 3.0,
-        min_obs: int = 30,
-    ) -> "KevinFrame":
-        """Seasonal-baseline anomaly flags — see
-        ``operators.anomaly.seasonal_anomalies``."""
-        from kevinlang_spark.operators.anomaly import seasonal_anomalies as _sa
-
-        return KevinFrame.from_df(
-            _sa(self._df, key_col, ts_col, value_col, n_sd, min_obs),
-            ordered=False,
-        )
-
-    def snapshot_diff(
-        self,
-        new: "KevinFrame",
-        key_cols: list[str],
-        compare_cols: list[str] | None = None,
-    ) -> "KevinFrame":
-        """Reconcile this snapshot against a newer one — see
-        ``operators.incremental.snapshot_diff``."""
-        from kevinlang_spark.operators.incremental import snapshot_diff as _sd
-
-        other = new._df if isinstance(new, KevinFrame) else new
-        return KevinFrame.from_df(
-            _sd(self._df, other, key_cols, compare_cols), ordered=False
-        )
-
-    def char_entropy(
-        self, id_col: str = "doc_id", text_col: str = "text"
-    ) -> "KevinFrame":
-        """Letter-distribution Shannon entropy per document — see
-        ``operators.text.char_entropy``."""
-        from kevinlang_spark.operators.text import char_entropy as _ce
-
-        return KevinFrame.from_df(
-            _ce(self._df, id_col, text_col), ordered=False
-        )
-
-    def bpe_merge_pairs(
-        self, text_col: str = "text", top_k: int = 20
-    ) -> "KevinFrame":
-        """Top-k BPE merge candidates (adjacent char-pair counts) — see
-        ``operators.text.bpe_merge_pairs``."""
-        from kevinlang_spark.operators.text import bpe_merge_pairs as _bp
-
-        return KevinFrame.from_df(_bp(self._df, text_col, top_k), ordered=False)
-
-    def ngram_diversity(
-        self, group_col: str = "source", text_col: str = "text"
-    ) -> "KevinFrame":
-        """Per-group bigram diversity ratio — see
-        ``operators.text.ngram_diversity``."""
-        from kevinlang_spark.operators.text import ngram_diversity as _nd
-
-        return KevinFrame.from_df(
-            _nd(self._df, group_col, text_col), ordered=False
-        )
-
-    def mixture_weights(
-        self, group_col: str = "source", alpha: float = 0.5
-    ) -> "KevinFrame":
-        """Temperature-scaled corpus mixing weights — see
-        ``operators.sampling.mixture_weights``."""
-        from kevinlang_spark.operators.sampling import mixture_weights as _mw
-
-        return KevinFrame.from_df(
-            _mw(self._df, group_col, alpha), ordered=False
-        )
-
-    def window_dedup(
-        self,
-        keys: list[str],
-        ts_col: str = "ts",
-        id_col: str = "event_id",
-        window_s: int = 600,
-    ) -> "KevinFrame":
-        """First-arrival dedup per tumbling window — see
-        ``operators.events.window_dedup``."""
-        from kevinlang_spark.operators.events import window_dedup as _wd
-
-        return KevinFrame.from_df(
-            _wd(self._df, keys, ts_col, id_col, window_s), ordered=False
-        )
-
-    def hll_rollup(
-        self, key_cols: list[str], unit_col, value_col: str, lgk: int = 14
-    ) -> "KevinFrame":
-        """Unioned per-unit HLL distinct sketches — see
-        ``operators.sketches.hll_rollup``."""
-        from kevinlang_spark.operators.sketches import hll_rollup as _hr
-
-        return KevinFrame.from_df(
-            _hr(self._df, key_cols, unit_col, value_col, lgk), ordered=False
-        )
-
-    def kll_rollup(
-        self,
-        key_cols: list[str],
-        unit_col,
-        value_col: str,
-        quantiles: tuple[float, ...] = (0.5,),
-        k: int = 200,
-    ) -> "KevinFrame":
-        """Merged per-unit KLL quantile sketches — see
-        ``operators.sketches.kll_rollup``."""
-        from kevinlang_spark.operators.sketches import kll_rollup as _kr
-
-        return KevinFrame.from_df(
-            _kr(self._df, key_cols, unit_col, value_col, quantiles, k),
-            ordered=False,
-        )
-
-    def theta_rollup(
-        self, key_cols: list[str], unit_col, value_col: str, lgk: int = 12
-    ) -> "KevinFrame":
-        """Per-unit Theta sketches (set-algebra capable) — see
-        ``operators.sketches.theta_rollup``."""
-        from kevinlang_spark.operators.sketches import theta_rollup as _tr
-
-        return KevinFrame.from_df(
-            _tr(self._df, key_cols, unit_col, value_col, lgk), ordered=False
-        )
-
-    def join_key_profile(
-        self, other: "KevinFrame", key_self: str, key_other: str, lgk: int = 14
-    ) -> "KevinFrame":
-        """Sketch-based join-size pre-flight — see
-        ``operators.sketches.join_key_profile``."""
-        from kevinlang_spark.operators.sketches import join_key_profile as _jk
-
-        return KevinFrame.from_df(
-            _jk(self._df, other._df, key_self, key_other, lgk), ordered=False
-        )
-
-    def dyadic_smooth(
-        self,
-        keys: list[str],
-        value_col: str = "value",
-        ts_col: str = "ts",
-        id_col: str = "event_id",
-        horizon: int = 20,
-        scale: int = 100,
-    ) -> "KevinFrame":
-        """Exact-dyadic sequential smoothing — see
-        ``operators.events.dyadic_smooth``."""
-        from kevinlang_spark.operators.events import dyadic_smooth as _ds
-
-        return KevinFrame.from_df(
-            _ds(self._df, keys, value_col, ts_col, id_col, horizon, scale),
-            ordered=False,
-        )
-
-    def funnel_latency(
-        self,
-        step_a: str,
-        step_b: str,
-        user_col: str = "user_id",
-        ts_col: str = "ts",
-        type_col: str = "event_type",
-    ) -> "KevinFrame":
-        """Funnel time-to-convert quartiles — see
-        ``operators.events.funnel_latency``."""
-        from kevinlang_spark.operators.events import funnel_latency as _fl
-
-        return KevinFrame.from_df(
-            _fl(self._df, step_a, step_b, user_col, ts_col, type_col),
-            ordered=False,
-        )
-
-    def novelty_counts(
-        self,
-        group_col: str = "source",
-        text_col: str = "text",
-        order_col: str = "doc_id",
-    ) -> "KevinFrame":
-        """Per-group first-occurrence novelty — see
-        ``operators.dedup.novelty_counts``."""
-        from kevinlang_spark.operators.dedup import novelty_counts as _nc
-
-        return KevinFrame.from_df(
-            _nc(self._df, group_col, text_col, order_col), ordered=False
-        )
-
-    def dp_counts(
-        self,
-        keys: list[str],
-        epsilon: float = 1.0,
-        seed: str = "dp",
-        clamp: bool = True,
-        *,
-        release_id: str,
-    ) -> "KevinFrame":
-        """ε-DP noisy count release — see ``operators.quality.dp_counts``
-        (release_id is mandatory: same-seed reuse across releases enables
-        a differencing attack)."""
-        from kevinlang_spark.operators.quality import dp_counts as _dp
-
-        return KevinFrame.from_df(
-            _dp(self._df, keys, epsilon, seed, clamp, release_id=release_id),
-            ordered=False,
-        )
-
-    def cms_frequencies(
-        self,
-        col: str,
-        items,
-        eps: float = 0.0001,
-        confidence: float = 0.99,
-        seed: int = 1,
-    ) -> "KevinFrame":
-        """Count–Min point-frequency probes — see
-        ``operators.sketches.cms_frequencies``."""
-        from kevinlang_spark.operators.sketches import cms_frequencies as _cf
-
-        return KevinFrame.from_df(
-            _cf(self._df, col, items, eps, confidence, seed), ordered=False
-        )
-
-    def grouped_heavy_hitters(
-        self, group_col: str, col: str, k: int = 10, capacity: int = 256
-    ) -> "KevinFrame":
-        """Per-group bounded-memory top-k — see
-        ``operators.sketches.grouped_heavy_hitters``."""
-        from kevinlang_spark.operators.sketches import (
-            grouped_heavy_hitters as _gh,
-        )
-
-        return KevinFrame.from_df(
-            _gh(self._df, group_col, col, k, capacity), ordered=False
-        )
-
-    def kcenter_sample(
-        self, vec_col: str = "embedding", id_col: str = "vec_id", k: int = 4
-    ) -> "KevinFrame":
-        """Greedy k-center diversity coreset — see
-        ``operators.similarity.kcenter_sample``."""
-        from kevinlang_spark.operators.similarity import kcenter_sample as _kc
-
-        return KevinFrame.from_df(
-            _kc(self._df, vec_col, id_col, k), ordered=False
-        )
-
-    def km_survival(
-        self,
-        user_col: str = "user_id",
-        ts_col: str = "ts",
-        censor_days: int = 3,
-    ) -> "KevinFrame":
-        """Kaplan–Meier survival curve — see
-        ``operators.stats.km_survival``."""
-        from kevinlang_spark.operators.stats import km_survival as _km
-
-        return KevinFrame.from_df(
-            _km(self._df, user_col, ts_col, censor_days), ordered=False
-        )
-
-    def acf_by_key(
-        self,
-        key_col: str = "event_type",
-        ts_col: str = "ts",
-        value_col: str = "value",
-        bucket_s: int = 3600,
-        max_lag: int = 6,
-    ) -> "KevinFrame":
-        """Per-key autocorrelation function — see
-        ``operators.anomaly.acf_by_key``."""
-        from kevinlang_spark.operators.anomaly import acf_by_key as _acf
-
-        return KevinFrame.from_df(
-            _acf(self._df, key_col, ts_col, value_col, bucket_s, max_lag),
-            ordered=False,
-        )
-
-    def markov_attribution(
-        self,
-        user_col: str = "user_id",
-        type_col: str = "event_type",
-        ts_col: str = "ts",
-        id_col: str = "event_id",
-        conv_type: str = "purchase",
-        iterations: int = 12,
-    ) -> "KevinFrame":
-        """Markov removal-effect attribution — see
-        ``operators.events.markov_attribution``."""
-        from kevinlang_spark.operators.events import markov_attribution as _ma
-
-        return KevinFrame.from_df(
-            _ma(self._df, user_col, type_col, ts_col, id_col, conv_type, iterations),
-            ordered=False,
-        )
-
-    def seasonal_backtest(
-        self,
-        key_col: str = "event_type",
-        ts_col: str = "ts",
-        season_s: int = 86_400,
-        bucket_s: int = 3_600,
-        eval_buckets: int = 168,
-    ) -> "KevinFrame":
-        """Seasonal-naive forecast backtest — see
-        ``operators.anomaly.seasonal_backtest``."""
-        from kevinlang_spark.operators.anomaly import seasonal_backtest as _sb
-
-        return KevinFrame.from_df(
-            _sb(self._df, key_col, ts_col, season_s, bucket_s, eval_buckets),
-            ordered=False,
-        )
-
-    def mahalanobis_outliers(
-        self,
-        key_col: str,
-        x_col: str,
-        y_col: str,
-        id_col: str,
-        threshold: float = 13.816,
-    ) -> "KevinFrame":
-        """Bivariate Mahalanobis outliers per group — see
-        ``operators.stats.mahalanobis_outliers``."""
-        from kevinlang_spark.operators.stats import mahalanobis_outliers as _mo
-
-        return KevinFrame.from_df(
-            _mo(self._df, key_col, x_col, y_col, id_col, threshold),
-            ordered=False,
-        )
-
-    def winnow_fingerprints(
-        self,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        k: int = 5,
-        window: int = 4,
-    ) -> "KevinFrame":
-        """Winnowing rolling-hash fingerprints — see
-        ``operators.text.winnow_fingerprints``."""
-        from kevinlang_spark.operators.text import winnow_fingerprints as _wf
-
-        return KevinFrame.from_df(
-            _wf(self._df, text_col, id_col, k, window), ordered=False
-        )
-
-    def token_pmi(
-        self,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        vocab_size: int = 50,
-        min_pair_docs: int = 5,
-    ) -> "KevinFrame":
-        """Token-pair PMI collocations — see
-        ``operators.text.token_pmi``."""
-        from kevinlang_spark.operators.text import token_pmi as _pmi
-
-        return KevinFrame.from_df(
-            _pmi(self._df, text_col, id_col, vocab_size, min_pair_docs),
-            ordered=False,
-        )
-
-    def kcore(
-        self, k: int = 3, rounds: int = 8, src: str = "a", dst: str = "b"
-    ) -> "KevinFrame":
-        """k-core peeling over this frame's edge list — see
-        ``operators.graph.kcore``."""
-        from kevinlang_spark.operators.graph import kcore as _kcore
-
-        return KevinFrame.from_df(
-            _kcore(self._df, k, rounds, src, dst), ordered=False
-        )
-
-    def label_propagation(
-        self, rounds: int = 5, src: str = "a", dst: str = "b"
-    ) -> "KevinFrame":
-        """LPA community labels over this frame's edge list — see
-        ``operators.graph.label_propagation``."""
-        from kevinlang_spark.operators.graph import label_propagation as _lpa
-
-        return KevinFrame.from_df(
-            _lpa(self._df, rounds, src, dst), ordered=False
-        )
-
-    def hits(
-        self, iterations: int = 8, src: str = "src", dst: str = "dst"
-    ) -> "KevinFrame":
-        """HITS hub/authority scores over this frame's directed edge
-        list — see ``operators.graph.hits``."""
-        from kevinlang_spark.operators.graph import hits as _hits
-
-        return KevinFrame.from_df(
-            _hits(self._df, iterations, src, dst), ordered=False
-        )
-
-    def pca_top_component(
-        self,
-        vec_col: str = "embedding",
-        dim: int = 64,
-        iterations: int = 12,
-    ) -> "KevinFrame":
-        """Top principal component of an embedding column — see
-        ``operators.pca.pca_top_component``."""
-        from kevinlang_spark.operators.pca import pca_top_component as _pca
-
-        return KevinFrame.from_df(
-            _pca(self._df, vec_col, dim, iterations), ordered=False
-        )
-
-    def sorted_neighborhood_pairs(
-        self,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        key_len: int = 24,
-        bucket_prefix: int = 2,
-        window: int = 5,
-        max_dist: int = 6,
-    ) -> "KevinFrame":
-        """Sorted-neighborhood near-dup candidates — see
-        ``operators.dedup.sorted_neighborhood_pairs``."""
-        from kevinlang_spark.operators.dedup import (
-            sorted_neighborhood_pairs as _sn,
-        )
-
-        return KevinFrame.from_df(
-            _sn(self._df, text_col, id_col, key_len, bucket_prefix, window, max_dist),
-            ordered=False,
-        )
-
-    def bloom_build(
-        self, col: str, m: int = 1 << 14, k: int = 5
-    ) -> "KevinFrame":
-        """Bloom filter (set-bit rows) over a column — see
-        ``operators.sketches.bloom_build``."""
-        from kevinlang_spark.operators.sketches import bloom_build as _bb
-
-        return KevinFrame.from_df(_bb(self._df, col, m, k), ordered=False)
 
     def bloom_probe(
         self,
@@ -1499,191 +903,6 @@ class KevinFrame:
 
         return KevinFrame.from_df(
             _bp(bloom._df, self._df, col, m, k), ordered=False
-        )
-
-    def sparse_cosine_pairs(
-        self,
-        threshold: float = 0.5,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        max_df: int = 100,
-    ) -> "KevinFrame":
-        """All-pairs TF-IDF cosine similarity — see
-        ``operators.text.sparse_cosine_pairs``."""
-        from kevinlang_spark.operators.text import sparse_cosine_pairs as _sc
-
-        return KevinFrame.from_df(
-            _sc(self._df, threshold, id_col, text_col, max_df), ordered=False
-        )
-
-    def wl_refinement(
-        self, rounds: int = 3, src: str = "a", dst: str = "b"
-    ) -> "KevinFrame":
-        """Weisfeiler–Lehman structural fingerprints over this frame's
-        edge list — see ``operators.graph.wl_refinement``."""
-        from kevinlang_spark.operators.graph import wl_refinement as _wl
-
-        return KevinFrame.from_df(
-            _wl(self._df, rounds, src, dst), ordered=False
-        )
-
-    def shortest_paths(
-        self,
-        source: int,
-        rounds: int = 6,
-        src: str = "src",
-        dst: str = "dst",
-        weight: str | None = None,
-    ) -> "KevinFrame":
-        """Bounded-round Bellman–Ford SSSP over this frame's edge list —
-        see ``operators.graph.shortest_paths``."""
-        from kevinlang_spark.operators.graph import shortest_paths as _sp
-
-        return KevinFrame.from_df(
-            _sp(self._df, source, rounds, src, dst, weight), ordered=False
-        )
-
-    def harmonic_centrality(
-        self,
-        sources: list[int],
-        rounds: int = 6,
-        src: str = "a",
-        dst: str = "b",
-    ) -> "KevinFrame":
-        """Sampled harmonic centrality over this frame's edge list —
-        see ``operators.graph.harmonic_centrality``."""
-        from kevinlang_spark.operators.graph import harmonic_centrality as _hc
-
-        return KevinFrame.from_df(
-            _hc(self._df, sources, rounds, src, dst), ordered=False
-        )
-
-    def adamic_adar(
-        self,
-        k: int = 20,
-        max_deg: int = 64,
-        src: str = "a",
-        dst: str = "b",
-    ) -> "KevinFrame":
-        """Adamic–Adar link prediction over this frame's edge list —
-        see ``operators.graph.adamic_adar``."""
-        from kevinlang_spark.operators.graph import adamic_adar as _aa
-
-        return KevinFrame.from_df(
-            _aa(self._df, k, max_deg, src, dst), ordered=False
-        )
-
-    def fs_link_pairs(
-        self,
-        id_col: str,
-        block_expr,
-        fields: dict,
-        threshold: float = 0.0,
-    ) -> "KevinFrame":
-        """Fellegi–Sunter probabilistic record linkage — see
-        ``operators.linkage.fs_link_pairs``."""
-        from kevinlang_spark.operators.linkage import fs_link_pairs as _fs
-
-        return KevinFrame.from_df(
-            _fs(self._df, id_col, block_expr, fields, threshold), ordered=False
-        )
-
-    def radius_join_pairs(
-        self,
-        id_col: str,
-        lat_col: str,
-        lon_col: str,
-        radius_km: float = 50.0,
-        cell_cap: int = 10_000,
-        lat_band_deg: float = 66.0,
-    ) -> "KevinFrame":
-        """Grid-blocked spatial radius join — see
-        ``operators.spatial.radius_join_pairs``."""
-        from kevinlang_spark.operators.spatial import radius_join_pairs as _rj
-
-        return KevinFrame.from_df(
-            _rj(self._df, id_col, lat_col, lon_col, radius_km, cell_cap, lat_band_deg),
-            ordered=False,
-        )
-
-    def fingerprint_clusters(
-        self, text_col: str = "text", id_col: str = "doc_id"
-    ) -> "KevinFrame":
-        """OpenRefine-style fingerprint key clustering — see
-        ``operators.quality.fingerprint_clusters``."""
-        from kevinlang_spark.operators.quality import (
-            fingerprint_clusters as _fc,
-        )
-
-        return KevinFrame.from_df(
-            _fc(self._df, text_col, id_col), ordered=False
-        )
-
-    def fd_violations(self, lhs: list, rhs: str) -> "KevinFrame":
-        """Functional-dependency check — see
-        ``operators.quality.fd_violations``."""
-        from kevinlang_spark.operators.quality import fd_violations as _fd
-
-        return KevinFrame.from_df(_fd(self._df, lhs, rhs), ordered=False)
-
-    def dsir_weights(
-        self,
-        target_pred,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        buckets: int = 1024,
-    ) -> "KevinFrame":
-        """DSIR importance-resampling weights — see
-        ``operators.text.dsir_weights``."""
-        from kevinlang_spark.operators.text import dsir_weights as _dw
-
-        return KevinFrame.from_df(
-            _dw(self._df, target_pred, id_col, text_col, buckets),
-            ordered=False,
-        )
-
-    def trigram_search(
-        self,
-        pattern: str,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> "KevinFrame":
-        """Trigram-index substring search — see
-        ``operators.text.trigram_search``."""
-        from kevinlang_spark.operators.text import trigram_search as _ts
-
-        return KevinFrame.from_df(
-            _ts(self._df, pattern, id_col, text_col), ordered=False
-        )
-
-    def feature_hash(
-        self,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        dim: int = 1024,
-    ) -> "KevinFrame":
-        """Hashing-trick sparse featurizer — see
-        ``operators.text.feature_hash``."""
-        from kevinlang_spark.operators.text import feature_hash as _fh
-
-        return KevinFrame.from_df(
-            _fh(self._df, id_col, text_col, dim), ordered=False
-        )
-
-    def pca_top_components(
-        self,
-        vec_col: str = "embedding",
-        dim: int = 64,
-        n_components: int = 2,
-        iterations: int = 12,
-    ) -> "KevinFrame":
-        """Top-k principal components by deflation — see
-        ``operators.pca.pca_top_components``."""
-        from kevinlang_spark.operators.pca import pca_top_components as _pcs
-
-        return KevinFrame.from_df(
-            _pcs(self._df, vec_col, dim, n_components, iterations),
-            ordered=False,
         )
 
     def rank_fusion(
@@ -2042,3 +1261,113 @@ class KevinFrame:
                 f"cols={list(self.pivot.col_fields)}, value={self.pivot.value_field})"
             )
         return f"KevinFrame(cols={self.columns}{', ' + ', '.join(state) if state else ''})"
+
+
+#: frame method -> ``kevinlang_spark.operators`` function it passes through
+#: to, with this frame as the operator's first argument.  The method's
+#: signature (minus the frame) and docstring are the operator's own.
+_OPERATOR_METHODS = {
+    "describe": "stats.profile_numeric",
+    "with_text_stats": "text.with_text_stats",
+    "validate": "quality.validate",
+    "dedup_semantic": "similarity.semantic_dedup",
+    "association_rules": "baskets.association_rules",
+    "apply_cdc": "incremental.apply_cdc",
+    "target_encode": "stats.target_encode",
+    "time_decayed_agg": "events.time_decayed_agg",
+    "poisson_bootstrap": "stats.poisson_bootstrap",
+    "psi_drift": "drift.psi_drift",
+    "group_ols": "stats.group_ols",
+    "k_anonymity": "quality.k_anonymity",
+    "cusum_changepoints": "anomaly.cusum_changepoints",
+    "seasonal_anomalies": "anomaly.seasonal_anomalies",
+    "snapshot_diff": "incremental.snapshot_diff",
+    "char_entropy": "text.char_entropy",
+    "bpe_merge_pairs": "text.bpe_merge_pairs",
+    "ngram_diversity": "text.ngram_diversity",
+    "mixture_weights": "sampling.mixture_weights",
+    "window_dedup": "events.window_dedup",
+    "hll_rollup": "sketches.hll_rollup",
+    "kll_rollup": "sketches.kll_rollup",
+    "theta_rollup": "sketches.theta_rollup",
+    "join_key_profile": "sketches.join_key_profile",
+    "dyadic_smooth": "events.dyadic_smooth",
+    "funnel_latency": "events.funnel_latency",
+    "novelty_counts": "dedup.novelty_counts",
+    "dp_counts": "quality.dp_counts",
+    "cms_frequencies": "sketches.cms_frequencies",
+    "grouped_heavy_hitters": "sketches.grouped_heavy_hitters",
+    "kcenter_sample": "similarity.kcenter_sample",
+    "km_survival": "stats.km_survival",
+    "acf_by_key": "anomaly.acf_by_key",
+    "markov_attribution": "events.markov_attribution",
+    "seasonal_backtest": "anomaly.seasonal_backtest",
+    "mahalanobis_outliers": "stats.mahalanobis_outliers",
+    "winnow_fingerprints": "text.winnow_fingerprints",
+    "token_pmi": "text.token_pmi",
+    "kcore": "graph.kcore",
+    "label_propagation": "graph.label_propagation",
+    "hits": "graph.hits",
+    "pca_top_component": "pca.pca_top_component",
+    "sorted_neighborhood_pairs": "dedup.sorted_neighborhood_pairs",
+    "bloom_build": "sketches.bloom_build",
+    "sparse_cosine_pairs": "text.sparse_cosine_pairs",
+    "wl_refinement": "graph.wl_refinement",
+    "shortest_paths": "graph.shortest_paths",
+    "harmonic_centrality": "graph.harmonic_centrality",
+    "adamic_adar": "graph.adamic_adar",
+    "fs_link_pairs": "linkage.fs_link_pairs",
+    "radius_join_pairs": "spatial.radius_join_pairs",
+    "fingerprint_clusters": "quality.fingerprint_clusters",
+    "fd_violations": "quality.fd_violations",
+    "dsir_weights": "text.dsir_weights",
+    "trigram_search": "text.trigram_search",
+    "feature_hash": "text.feature_hash",
+    "pca_top_components": "pca.pca_top_components",
+}
+
+
+def _operator_method(name: str, path: str):
+    """The pass-through method for one ``_OPERATOR_METHODS`` entry: frame
+    arguments are unwrapped to their DataFrame, the result is wrapped as an
+    unordered frame."""
+    module, attr = path.split(".")
+    op = getattr(importlib.import_module(f"kevinlang_spark.operators.{module}"), attr)
+
+    def _df(v):
+        return v._df if isinstance(v, KevinFrame) else v
+
+    def method(self, *args, **kwargs):
+        args = [_df(a) for a in args]
+        kwargs = {k: _df(v) for k, v in kwargs.items()}
+        return KevinFrame.from_df(op(self._df, *args, **kwargs), ordered=False)
+
+    sig = inspect.signature(op)
+    first, *rest = sig.parameters.values()
+    method.__signature__ = sig.replace(
+        parameters=[first.replace(name="self", annotation=inspect.Parameter.empty), *rest],
+        return_annotation="KevinFrame",
+    )
+    method.__doc__ = op.__doc__
+    method.__name__ = name
+    method.__qualname__ = f"KevinFrame.{name}"
+    return method
+
+
+class _LazyOperatorMethod:
+    """Descriptor that builds its method on first access, not at class
+    creation: importing every operator module eagerly pulls pandas into
+    ``import kevinlang_spark`` (via ``operators.pca``)."""
+
+    def __init__(self, name: str, path: str):
+        self.entry = (name, path)
+        self.fn = None
+
+    def __get__(self, obj, owner=None):
+        if self.fn is None:
+            self.fn = _operator_method(*self.entry)
+        return self.fn.__get__(obj, owner)
+
+
+for _name, _path in _OPERATOR_METHODS.items():
+    setattr(KevinFrame, _name, _LazyOperatorMethod(_name, _path))

@@ -3,11 +3,17 @@
 
 from __future__ import annotations
 
+import importlib
+import inspect
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from kevinlang_spark.errors import KevinFieldError, KevinTypeError, KevinValueError
-from kevinlang_spark.frame import KevinFrame, SortOrder
+from kevinlang_spark.frame import _OPERATOR_METHODS, KevinFrame, SortOrder
 from kevinlang_spark.traits import DataInterpretation, DataRole, KType
 
 
@@ -297,3 +303,56 @@ def test_frame_extension_surface_round4(spark):
     # global mean = 14/3; x: (4 + 14/3) / 3, y: (10 + 14/3) / 2
     assert abs(got["x"] - (4 + 14 / 3) / 3) < 1e-6
     assert abs(got["y"] - (10 + 14 / 3) / 2) < 1e-6
+
+
+@pytest.mark.parametrize("method, path", sorted(_OPERATOR_METHODS.items()))
+def test_operator_method_signature_matches_operator(method, path):
+    """A generated method takes its operator's parameters after the frame:
+    same names, kinds and defaults, so the two cannot drift apart."""
+    module, attr = path.split(".")
+    op = getattr(importlib.import_module(f"kevinlang_spark.operators.{module}"), attr)
+    got = list(inspect.signature(getattr(KevinFrame, method)).parameters.values())
+    want = list(inspect.signature(op).parameters.values())
+    assert got[0].name == "self"
+    assert got[1:] == want[1:]
+    assert getattr(KevinFrame, method).__doc__ == op.__doc__
+
+
+def test_operator_method_frame_argument_accepts_kevinframe_or_dataframe(spark):
+    base_df = spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)], ["k", "v"])
+    log_df = spark.createDataFrame(
+        [(2, 99.0, 1, "U"), (3, 0.0, 1, "D"), (4, 40.0, 1, "I")],
+        ["k", "v", "seq", "op"],
+    )
+    base = KevinFrame.from_df(base_df, ordered=False)
+    for log in (KevinFrame.from_df(log_df, ordered=False), log_df):
+        merged = base.apply_cdc(log, ["k"], "seq", "op")
+        assert isinstance(merged, KevinFrame) and not merged.ordered
+        assert {(r.k, r.v) for r in merged.df.collect()} == {
+            (1, 10.0), (2, 99.0), (4, 40.0)
+        }
+    profiles = [
+        base.join_key_profile(other, "k", "k").df.collect()
+        for other in (base, base_df)
+    ]
+    profiles.append(base.join_key_profile(b=base_df, key_a="k", key_b="k").df.collect())
+    assert profiles[0] == profiles[1] == profiles[2]
+
+
+def test_import_loads_no_operator_modules_or_pandas():
+    """Generated methods import their operator on first use: importing the
+    package must not pull in pandas or the operator modules."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", "import sys, kevinlang_spark; print(*sys.modules)"],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    loaded = {
+        m
+        for m in out
+        if m.split(".")[0] == "pandas" or m.startswith("kevinlang_spark.operators.")
+    }
+    assert loaded == {"kevinlang_spark.operators.aggregators"}

@@ -14,6 +14,8 @@ guards so the same two failure modes can't recur:
 from __future__ import annotations
 
 import math
+import pathlib
+import re
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -509,6 +511,15 @@ def test_every_query_has_an_oracle():
         f"driver window slots on exactly this): {sorted(qs - oracles - ROWS_ONLY)}"
     )
     assert oracles <= qs, f"orphan oracles: {sorted(oracles - qs)}"
+
+
+def test_readme_query_count_matches_registry():
+    """README's advertised query count must track len(queries()) —
+    a stale scorecard erodes trust in every other claim."""
+    n = len(entrymod.queries())
+    readme = (pathlib.Path(entrymod.__file__).parent / "README.md").read_text()
+    counts = {int(m) for m in re.findall(r"(\d+) queries", readme)}
+    assert counts == {n}, f"README says {counts}, registry has {n}"
 
 
 def test_every_query_schema_is_driver_hashable(spark, sf_dir):
