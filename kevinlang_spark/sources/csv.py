@@ -8,12 +8,26 @@ inference:
 - all values string            → (Text, Dimension, Discrete)
 - all numeric AND name=="year" → (Number, Dimension, Discrete)
 - all numeric                  → (Number, Measure, Continuous)
-- anything else (any missing / mixed) → strict mode raises
-  "Invalid data (possibly missing values)" (DataFrame.hs:237-238);
-  lenient=True instead keeps the column nullable with the majority type.
+- any blank cell, or numbers mixed with words → strict mode (the default)
+  raises "Invalid data (possibly missing values)" (DataFrame.hs:237-238).
+  With ``strict=False`` a column whose non-blank values are all numeric
+  stays a nullable Number; a column with any word, or with no value at
+  all, is Text, whatever the share of numbers in it.
 
 The inference statistics are computed in ONE distributed aggregation pass
 (not a per-column driver loop), so ingestion scales with the cluster.
+
+The inference pass (the header scan plus that aggregate, three Spark jobs)
+runs once per file version in a session (``sources.filecache``).  Its
+result is the raw all-string schema, with Spark's own header naming
+(duplicate names numbered, dots kept), and the per-column counts.  The key
+is the file's real path, device, inode, size, mtime and ctime, plus
+``spark.sql.caseSensitive``, which decides how duplicate headers are
+named.  One entry serves every ``strict``, ``decimal`` and ``ordered``
+setting: the traits, casts and strict-mode error are derived from the
+stored counts on every call.  A repeat read of an unchanged single local
+file therefore runs no Spark job before its first action; directories,
+globs and remote paths are inferred on every call.
 """
 
 from __future__ import annotations
@@ -23,7 +37,41 @@ from pyspark.sql import functions as F
 
 from kevinlang_spark.errors import KevinValueError
 from kevinlang_spark.frame import KevinFrame
+from kevinlang_spark.sources import filecache
 from kevinlang_spark.traits import NUM_DIM, NUM_MEASURE, TEXT_DIM, FieldTraits
+
+
+def _reader(spark: SparkSession):
+    return (
+        spark.read.option("header", True)
+        .option("quote", '"')
+        .option("escape", '"')
+        .option("nullValue", "")
+        .option("ignoreLeadingWhiteSpace", True)
+        .option("ignoreTrailingWhiteSpace", True)
+    )
+
+
+def _column_stats(raw) -> dict:
+    """One aggregation pass: per column — total, nulls, non-numeric
+    values, non-integral numeric values.  Backtick-quoted refs: headers
+    may contain dots, which bare F.col parses as nested-field access."""
+    aggs = [F.count(F.lit(1)).alias("__total")]
+    for i, c in enumerate(raw.columns):
+        col = F.col(f"`{c}`")
+        num = col.try_cast("double")
+        aggs.append(F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"__nulls_{i}"))
+        aggs.append(
+            F.sum(F.when(col.isNotNull() & num.isNull(), 1).otherwise(0)).alias(
+                f"__nonnum_{i}"
+            )
+        )
+        aggs.append(
+            F.sum(
+                F.when(num.isNotNull() & (num != F.floor(num)), 1).otherwise(0)
+            ).alias(f"__frac_{i}")
+        )
+    return raw.agg(*aggs).collect()[0].asDict()
 
 
 def read_csv(
@@ -43,36 +91,18 @@ def read_csv(
     accumulates no float drift) at the cost of slower arithmetic; the
     default stays ``double`` for throughput.
     """
-    raw = (
-        spark.read.option("header", True)
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("nullValue", "")
-        .option("ignoreLeadingWhiteSpace", True)
-        .option("ignoreTrailingWhiteSpace", True)
-        .csv(path)
-    )
-    cols = raw.columns
+    raw = None
 
-    # one aggregation pass: per column — total, nulls, non-numeric values,
-    # non-integral numeric values.  Backtick-quoted refs: headers may
-    # contain dots, which bare F.col parses as nested-field access.
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for i, c in enumerate(cols):
-        col = F.col(f"`{c}`")
-        num = col.try_cast("double")
-        aggs.append(F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"__nulls_{i}"))
-        aggs.append(
-            F.sum(F.when(col.isNotNull() & num.isNull(), 1).otherwise(0)).alias(
-                f"__nonnum_{i}"
-            )
-        )
-        aggs.append(
-            F.sum(
-                F.when(num.isNotNull() & (num != F.floor(num)), 1).otherwise(0)
-            ).alias(f"__frac_{i}")
-        )
-    stats = raw.agg(*aggs).collect()[0].asDict()
+    def inference():
+        nonlocal raw
+        raw = _reader(spark).csv(path)
+        return raw.schema, _column_stats(raw)
+
+    key = filecache.version_key(spark, path, "csv", ("spark.sql.caseSensitive",))
+    schema, stats = filecache.infer_once(spark, key, inference)
+    if raw is None:  # a stored entry: the same reader, given its schema
+        raw = _reader(spark).schema(schema).csv(path)
+    cols = raw.columns
     total = stats["__total"] or 0
 
     traits: dict[str, FieldTraits] = {}

@@ -12,6 +12,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from kevinlang_spark.frame import KevinFrame
+from kevinlang_spark.sources import filecache
 
 #: the driver's synthetic star schema (TESTDATA.md)
 TPCH_TABLES = (
@@ -27,6 +28,14 @@ TPCH_TABLES = (
     "embeddings",
 )
 
+#: session confs that change the schema Spark infers from a parquet footer
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
 
 def read_parquet(
     spark: SparkSession, path: str, ordered: bool = False
@@ -37,8 +46,23 @@ def read_parquet(
     never need row order, and skipping the order column keeps every scan
     prunable to exactly the referenced columns.  Pass ``ordered=True`` for
     the reference's presentation semantics.
+
+    A single local file's schema is read once per file version in a
+    session (``sources.filecache``); later reads pass it to ``.schema()``
+    and run no schema-inference job.  Directories are inferred every call.
     """
-    return KevinFrame.from_df(spark.read.parquet(path), ordered=ordered)
+    df = None
+
+    def inference():
+        nonlocal df
+        df = spark.read.parquet(path)
+        return df.schema
+
+    key = filecache.version_key(spark, path, "parquet", _SCHEMA_CONFS)
+    schema = filecache.infer_once(spark, key, inference)
+    if df is None:  # a stored entry: read with its schema, no footer job
+        df = spark.read.schema(schema).parquet(path)
+    return KevinFrame.from_df(df, ordered=ordered)
 
 
 def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
