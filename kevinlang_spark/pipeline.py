@@ -19,8 +19,10 @@ Skip rule (content-addressed, like a build system):
   its declared inputs, so editing one stage's code transparently
   invalidates everything downstream and nothing upstream;
 * a stage directory counts as done only when Spark's ``_SUCCESS``
-  marker exists AND the stored manifest fingerprint matches — a crash
-  mid-write leaves no marker, so the retry recomputes that stage.
+  marker exists AND the stored manifest fingerprint matches AND the
+  manifest stores the stage's schema — a crash mid-write leaves no
+  marker, so the retry recomputes that stage; a manifest written before
+  schemas were stored recomputes once.
 
 Reference parity note: the reference engine (harry75369/KevinLang) has
 no pipeline layer at all — frames are rebuilt per program run
@@ -37,11 +39,15 @@ import os
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["Stage", "run_pipeline", "pipeline_report"]
 
 _MANIFEST = "_STAGE_MANIFEST.json"
+#: name of the observation that counts a stage's rows during its write
+_ROWS = "__kevinlang_stage_rows"
 
 
 @dataclass(frozen=True)
@@ -88,11 +94,14 @@ def _read_manifest(path: str) -> dict | None:
         return None
 
 
-def _is_done(path: str, fingerprint: str) -> bool:
+def _done_manifest(path: str, fingerprint: str) -> dict | None:
+    """The stage's manifest if its output is complete and current."""
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        return False  # crash mid-write leaves no marker
+        return None  # crash mid-write leaves no marker
     m = _read_manifest(path)
-    return bool(m) and m.get("fingerprint") == fingerprint
+    if m and m.get("fingerprint") == fingerprint and "schema" in m:
+        return m
+    return None
 
 
 def run_pipeline(
@@ -111,9 +120,13 @@ def run_pipeline(
     Scale notes: each stage writes once and every consumer reads the
     parquet (never re-executes the producing plan), so a stage fanned
     into N consumers costs one shuffle-free scan per consumer instead
-    of N plan re-executions; the manifest records row count so
+    of N plan re-executions.  The row count is observed during the
+    write (no re-scan) and recorded in the manifest, so
     :func:`pipeline_report` audits volume drop per curation stage
-    without recounting."""
+    without recounting.  The manifest also records the schema, and
+    every stage output is read back with it, so a skipped stage runs
+    0 Spark jobs (no parquet footer inference); a manifest written
+    before schemas were stored recomputes its stage once."""
     seen: dict[str, str] = {}
     names = [s.name for s in stages]
     if len(set(names)) != len(names):
@@ -143,24 +156,29 @@ def run_pipeline(
         fingerprint = h.hexdigest()
         seen[st.name] = fingerprint
         path = _stage_dir(root, st.name)
-        if not _is_done(path, fingerprint):
+        m = _done_manifest(path, fingerprint)
+        if m is None:
             args = {i: out[i] for i in st.inputs}
             if "spark" in inspect.signature(st.fn).parameters:
                 args["spark"] = spark
             df = st.fn(**args)
-            df.write.mode("overwrite").parquet(path)
-            n = spark.read.parquet(path).count()
+            rows = Observation(_ROWS)
+            df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            m = {
+                "stage": st.name,
+                "fingerprint": fingerprint,
+                "inputs": list(st.inputs),
+                "rows": rows.get["rows"],
+                "schema": df.schema.jsonValue(),
+            }
             with open(os.path.join(path, _MANIFEST), "w") as fh:
-                json.dump(
-                    {
-                        "stage": st.name,
-                        "fingerprint": fingerprint,
-                        "inputs": list(st.inputs),
-                        "rows": n,
-                    },
-                    fh,
-                )
-        out[st.name] = spark.read.parquet(path)
+                json.dump(m, fh)
+        # the file source makes a given schema nullable at every level,
+        # as parquet inference would
+        schema = StructType.fromJson(m["schema"])
+        out[st.name] = spark.read.schema(schema).parquet(path)
     return out
 
 
