@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import random
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -79,128 +80,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(
-    text: Column, num_hashes: int = 64, shingle_n: int = 3, seed: int = 42
-) -> Column:
-    """array<bigint> MinHash signature of the word-``shingle_n``-gram set.
-
-    Base hash = xxhash64(shingle); the hash family is affine permutations
-    ``(a·h + b) mod p`` over a broadcast literal parameter array, evaluated
-    with nested higher-order functions — one expression, no UDF, no
-    shuffle.  ``pmod`` keeps residues non-negative.
-    """
-    params = _hash_params(num_hashes, seed)
-    param_arr = F.array(
-        *[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params]
-    )
-    shingle_hashes = F.transform(
-        F.array_distinct(word_shingles(text, shingle_n)),
-        lambda s: F.xxhash64(s),
-    )
-    return F.when(F.size(shingle_hashes) <= 0, F.lit(None)).otherwise(
-        F.transform(
-            param_arr,
-            lambda p: F.array_min(
-                F.transform(
-                    shingle_hashes,
-                    lambda h: F.pmod(p["a"] * F.pmod(h, F.lit(MERSENNE)) + p["b"], F.lit(MERSENNE)),
-                )
-            ),
-        )
-    )
-
-
-def shingle_sets_df(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sh array<string>) distinct shingle sets, MATERIALIZED
-    (localCheckpoint): every consumer — signature generation, both sides of
-    the Jaccard-verify joins — reads stored blocks instead of re-running
-    tokenize+shingle.  Spark does not reuse exchanges across self-join
-    sides, so without this the text pass runs 2-4×."""
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias("sh"),
-        )
-        .repartition(max(df.sparkSession.sparkContext.defaultParallelism, 8))
-        .localCheckpoint(eager=False)
-    )
-
-
-def _minhash_sig_udf(num_hashes: int, seed: int):
-    """Arrow-batched pandas UDF: token-hash array → MinHash signature in
-    one vectorized int64 numpy pass (a, h < 2^31 → a·h + b < 2^62, exact)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    params = _hash_params(num_hashes, seed)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)
-    b_vec = np.array([b for _, b in params], dtype=np.int64)
-
-    # explicit SCALAR type: `from __future__ import annotations` makes type
-    # hints strings, which defeats pandas-UDF signature inference
-    @pandas_udf("array<bigint>", PandasUDFType.SCALAR)
-    def _sig(hs):
-        out = []
-        for h in hs:
-            if h is None or len(h) == 0:
-                out.append(None)
-                continue
-            hv = np.asarray(h, dtype=np.int64)
-            # (num_hashes, n_shingles) affine permutations mod p, min per row
-            m = (a_vec[:, None] * hv[None, :] + b_vec[:, None]) % MERSENNE
-            out.append(m.min(axis=1).tolist())
-        return pd.Series(out)
-
-    return _sig
-
-
-def minhash_signatures_df(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig array<bigint>) with the signature MATERIALIZED behind an
-    exchange barrier.
-
-    Shingle hashing (tokenize → n-grams → xxhash64) stays JVM-side; the
-    64 affine permutations + mins run as an Arrow-batched pandas UDF in
-    ONE vectorized numpy einsum-style pass — higher-order Catalyst
-    expressions don't participate in codegen, so the pure-expression
-    version evaluates ~50M interpreted ops (measured ~3× slower).  The
-    barrier (repartition) prevents CollapseProject from re-inlining the
-    signature into every band key downstream (~16× recompute); in a
-    production pipeline the signature table would simply be written out
-    (the standard minhash checkpoint).
-    """
-    _sig = _minhash_sig_udf(num_hashes, seed)
-    if shingles is None:
-        shingles = shingle_sets_df(df, id_col, text_col, shingle_n)
-    hashed = shingles.select(
-        "id",
-        F.transform(F.col("sh"), lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE))).alias(
-            "hs"
-        ),
-    )
-    sig_df = hashed.select("id", _sig("hs").alias("sig"))
-    # materialize + truncate lineage: the LSH self-join references this
-    # frame on BOTH sides and Spark does not reuse the exchange across the
-    # join — without this the whole signature pipeline runs twice (measured
-    # 11.7s vs 0.7s).  Blocks are GC-cleaned; a production pipeline would
-    # write the signature table to storage instead (localCheckpoint is not
-    # executor-loss-tolerant).
-    return sig_df.localCheckpoint(eager=False)
-
-
 def shingle_sig_df(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -220,15 +99,13 @@ def shingle_sig_df(
     by the full text volume.
 
     ``sig_df`` = (id, sig array<bigint>): MinHash signatures computed
-    RELATIONALLY — explode the stored hashes and take ``num_hashes``
-    min-aggregations of affine permutations over them.  Everything stays
-    in whole-stage codegen with map-side partial mins, so the groupBy
-    shuffles one 64-long row per doc per partition; no Python worker, no
-    Arrow transfer, no second checkpoint.  (The pandas-UDF variant
-    ``minhash_signatures_df`` remains for callers without a stored hash
-    table; the relational form wins when the hashes are materialized
-    anyway, as here.)  Empty documents simply produce no exploded rows —
-    equivalent to the NULL-signature filter in the UDF path."""
+    IN-ROW over the stored hashes — one ``array_min`` of affine
+    permutations per hash function, inside the scan of the checkpointed
+    table; no shuffle, no Python worker, no second checkpoint.  Empty
+    documents get a NULL signature, which banding filters out.
+
+    This is the only MinHash signature builder: every near-dup entry
+    point that is not handed its inputs builds them here."""
     n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     # shingle hashing without building shingle STRINGS: hash each token to
     # int64, then hash each n-token window as xxhash64 over the sliced
@@ -262,6 +139,9 @@ def shingle_sig_df(
         .repartition(n_part)
         .select("id", th.alias("__th"))
         .select("id", shh.alias("shh"))
+        # trade-off: the blocks live on executors with the lineage cut, so
+        # this is NOT executor-loss tolerant (a lost block fails the query);
+        # write_minhash_index is the durable alternative
         .localCheckpoint(eager=True)
     )
     params = _hash_params(num_hashes, seed)
@@ -285,13 +165,26 @@ def shingle_sig_df(
         )
 
     mins = [_perm_min(a, b) for a, b in params]
-    # empty hash set → NULL sig (matches the explode form, where such ids
-    # simply vanished from the aggregation and were isNotNull-filtered)
+    # empty hash set → NULL sig, which band_keys filters out
     sig_df = sh_df.select(
         "id",
         F.when(F.size("shh") > 0, F.array(*mins)).alias("sig"),
     )
     return sh_df, sig_df
+
+
+def _band_rows(num_hashes: int, bands: int) -> int:
+    """Signature values per LSH band; raises before any Spark work on a
+    split that cannot band."""
+    if bands <= 0 or num_hashes % bands != 0:
+        # rows=0 would key every doc into ONE bucket (full quadratic
+        # blowup); a non-divisible split would silently ignore trailing
+        # hashes
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a positive multiple of "
+            f"bands ({bands})"
+        )
+    return num_hashes // bands
 
 
 def band_keys(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -335,7 +228,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    shingles: DataFrame | None = None,
     signatures: DataFrame | None = None,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
@@ -356,22 +248,15 @@ def minhash_lsh_candidates(
     majority) die in the size filter before producing any row.  Pairs are
     distinct-ed; verification (exact Jaccard) is a separate op so callers
     can tune the candidate/verify trade-off.
+
+    Without ``signatures`` the call signs ``df`` with ``shingle_sig_df``,
+    which runs its eager checkpoint job at call time.
     """
-    if bands <= 0 or num_hashes % bands != 0:
-        # rows=0 would key every doc into ONE bucket (full quadratic
-        # blowup); a non-divisible split would silently ignore trailing
-        # hashes
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands})"
-        )
-    rows = num_hashes // bands
+    rows = _band_rows(num_hashes, bands)
     sig_df = (
         signatures
         if signatures is not None
-        else minhash_signatures_df(
-            df, id_col, text_col, num_hashes, shingle_n, seed, shingles=shingles
-        )
+        else shingle_sig_df(df, id_col, text_col, num_hashes, shingle_n, seed)[1]
     )
     banded = band_keys(sig_df, bands, rows)
     buckets = banded.groupBy("band", "key").agg(F.collect_list("id").alias("ids"))
@@ -410,12 +295,15 @@ def jaccard_verify(
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs: two joins to attach
-    shingle sets (strings or hashes — Jaccard is representation-invariant),
-    then array_intersect/union — no explode.  The pair side is small (LSH
-    candidates, bounded by bucket caps), so AQE turns both joins into
-    broadcasts at runtime."""
+    shingle sets (id, sh), then array_intersect/union — no explode.  The
+    pair side is small (LSH candidates, bounded by bucket caps), so AQE
+    turns both joins into broadcasts at runtime.
+
+    Without ``shingles`` the call hashes ``df`` with ``shingle_sig_df``,
+    which runs its eager checkpoint job at call time."""
     if shingles is None:
-        shingles = shingle_sets_df(df, id_col, text_col, shingle_n)
+        sh_df = shingle_sig_df(df, id_col, text_col, shingle_n=shingle_n)[0]
+        shingles = sh_df.withColumnRenamed("shh", "sh")
     out = (
         pairs.join(shingles.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(shingles.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -516,7 +404,11 @@ def append_minhash_index(
     spark = df_new.sparkSession
     try:
         stored = spark.read.parquet(f"{path}/params").first()
-    except Exception:
+    except AnalysisException as e:
+        # only a MISSING sidecar means a pre-sidecar index; an unreadable
+        # one must not switch the hash-family guard off
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         stored = None  # pre-sidecar index: nothing to validate against
     if stored is not None and (
         stored["num_hashes"],
@@ -543,18 +435,9 @@ def append_minhash_index(
     )
 
 
-def minhash_dedup_pairs_indexed(
-    spark,
-    path: str,
-    threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 16,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
-    """The full near-dup pipeline over a ``write_minhash_index`` table:
-    identical semantics to ``minhash_dedup_pairs`` (same hash family for
-    the same (num_hashes, seed)), zero text processing — candidates band
-    the stored signatures, verify intersects the stored shingle hashes."""
+def _read_minhash_index(spark, path: str, num_hashes: int) -> tuple[DataFrame, DataFrame]:
+    """``(shingles, signatures)`` tables of a ``write_minhash_index``
+    index, after checking its signatures are ``num_hashes`` long."""
     sh = spark.read.parquet(f"{path}/shingles")
     sig = spark.read.parquet(f"{path}/signatures")
     # fail fast on a family mismatch: banding a sig array shorter than
@@ -567,6 +450,22 @@ def minhash_dedup_pairs_indexed(
             f"index at {path!r} stores {first['n']}-hash signatures; "
             f"pass num_hashes={first['n']} (got {num_hashes})"
         )
+    return sh, sig
+
+
+def minhash_dedup_pairs_indexed(
+    spark,
+    path: str,
+    threshold: float = 0.8,
+    num_hashes: int = 32,
+    bands: int = 16,
+    max_bucket_size: int | None = 10_000,
+) -> DataFrame:
+    """The full near-dup pipeline over a ``write_minhash_index`` table:
+    identical semantics to ``minhash_dedup_pairs`` (same hash family for
+    the same (num_hashes, seed)), zero text processing — candidates band
+    the stored signatures, verify intersects the stored shingle hashes."""
+    sh, sig = _read_minhash_index(spark, path, num_hashes)
     cands = minhash_lsh_candidates(
         None,
         num_hashes=num_hashes,
@@ -1193,21 +1092,9 @@ def minhash_probe_index(
     against the index scan — the corpus never shuffles.  The hash family
     must match the one the index was written with (same num_hashes /
     shingle_n / seed), which write_minhash_index guarantees for its own
-    defaults; the sig-length check below fails fast on a mismatch."""
-    if bands <= 0 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands})"
-        )
-    rows = num_hashes // bands
-    idx_sh = spark.read.parquet(f"{path}/shingles")
-    idx_sig = spark.read.parquet(f"{path}/signatures")
-    first = idx_sig.select(F.size("sig").alias("n")).first()
-    if first is not None and first["n"] != num_hashes:
-        raise ValueError(
-            f"index at {path!r} stores {first['n']}-hash signatures; "
-            f"pass num_hashes={first['n']} (got {num_hashes})"
-        )
+    defaults; ``_read_minhash_index`` fails fast on a mismatch."""
+    rows = _band_rows(num_hashes, bands)
+    idx_sh, idx_sig = _read_minhash_index(spark, path, num_hashes)
     probe_sh, probe_sig = shingle_sig_df(
         new_docs, id_col, text_col, num_hashes, shingle_n, seed
     )

@@ -65,6 +65,53 @@ def test_minhash_reported_pairs_are_truly_similar(docs):
         assert p["jaccard"] == pytest.approx(j, abs=1e-3)
 
 
+def _pairs(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_lsh_candidates_default_signatures_match_shingle_sig_df(docs):
+    """With no ``signatures``, candidates are banded from the
+    ``shingle_sig_df`` signatures, so both calls return the same pairs."""
+    _, sig = dedup.shingle_sig_df(docs, "doc_id", "text", num_hashes=32)
+    default = _pairs(dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=16))
+    given = _pairs(
+        dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=16, signatures=sig)
+    )
+    assert default, "the corpus has planted near-dups"
+    assert default == given
+
+
+def test_jaccard_verify_default_shingles_match_hashed(docs):
+    """With no ``shingles``, verify intersects the ``shingle_sig_df``
+    hash sets: the same pairs and scores as passing them in."""
+    sh, sig = dedup.shingle_sig_df(docs, "doc_id", "text", num_hashes=32)
+    cands = dedup.minhash_lsh_candidates(None, num_hashes=32, bands=16, signatures=sig)
+    hashed = sh.select("id", F.col("shh").alias("sh"))
+    for threshold in (0.8, 0.5):
+        default = _pairs(dedup.jaccard_verify(docs, cands, threshold=threshold))
+        given = _pairs(
+            dedup.jaccard_verify(docs, cands, threshold=threshold, shingles=hashed)
+        )
+        assert default, threshold
+        assert default == given, threshold
+
+
+def test_bad_band_split_raises_before_any_spark_job(spark, docs):
+    """A ``num_hashes``/``bands`` split that cannot band raises before the
+    signature checkpoint or the index read starts a job."""
+    from test_csv_cache import _jobs
+
+    def raises(call):
+        with pytest.raises(ValueError, match="multiple of"):
+            call()
+
+    for call in (
+        lambda: dedup.minhash_lsh_candidates(docs, bands=7),
+        lambda: dedup.minhash_probe_index(spark, "/nonexistent", docs, bands=0),
+    ):
+        assert _jobs(spark, lambda: raises(call))[0] == 0
+
+
 def test_simhash_vectorized_matches_expression(spark, docs):
     """The numpy pandas-UDF signature must equal the pure-expression
     simhash bit for bit."""

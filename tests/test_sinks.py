@@ -205,6 +205,37 @@ def test_minhash_index_append_guards_family_and_is_idempotent(
     assert spark.read.parquet(f"{idx}/signatures").count() == n_sig
 
 
+def test_minhash_index_append_corrupt_sidecar_raises(spark, sf_dir, tmp_path):
+    """An unreadable ``params`` sidecar must fail the append, not switch
+    the hash-family guard off; only a missing sidecar means a pre-sidecar
+    index.  Nothing may be appended."""
+    import glob
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from kevinlang_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = docs.where(F.col("doc_id") % 5 != 0)
+    new = docs.where(F.col("doc_id") % 5 == 0)
+    idx = str(tmp_path / "mh_corrupt")
+    dedup.write_minhash_index(base, idx, seed=7)
+    for part in glob.glob(f"{idx}/params/*.parquet"):
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    for crc in glob.glob(f"{idx}/params/.*.crc"):
+        os.remove(crc)  # let the reader see the garbage, not a checksum miss
+    n_sh = spark.read.parquet(f"{idx}/shingles").count()
+    n_sig = spark.read.parquet(f"{idx}/signatures").count()
+    # the read error names the sidecar file it could not read
+    with pytest.raises(Exception, match="mh_corrupt/params/"):
+        dedup.append_minhash_index(new, idx)
+    assert spark.read.parquet(f"{idx}/shingles").count() == n_sh
+    assert spark.read.parquet(f"{idx}/signatures").count() == n_sig
+
+
 # --------------------------------------------------------------------- #
 # training shards + manifest
 # --------------------------------------------------------------------- #
