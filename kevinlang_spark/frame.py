@@ -65,6 +65,9 @@ IDX = "__idx"
 #: order spec entry: (column name, ascending?)
 OrderSpec = tuple[tuple[str, bool], ...]
 
+#: most rows an action fetches to keep on the frame as its answer
+_ROWS_BOUND = 10_000
+
 
 class SortOrder(enum.Enum):
     ASCENDING = "asc"
@@ -104,7 +107,15 @@ def _q(name: str) -> "Column":
 
 
 class KevinFrame:
-    """Immutable combinator-algebra frame over a Spark DataFrame."""
+    """Immutable combinator-algebra frame over a Spark DataFrame.
+
+    The first action that fetches every row of ``to_df()`` fixes the
+    frame's rows: ``height`` or ``collect`` of at most ``_ROWS_BOUND``
+    rows, or a render of at most ``max_rows``.  Later actions on the same
+    frame read them and run no Spark job, and a source rewritten in
+    between is not read again — as the reference's ``height`` and
+    ``show`` read one in-memory frame (DataFrame.hs:65-172).  A derived
+    frame starts without rows."""
 
     def __init__(
         self,
@@ -127,6 +138,8 @@ class KevinFrame:
         #: pending lazy sort: [(col, asc), ...]; row order = spec + __idx
         self.order_spec: OrderSpec = tuple(order_spec)
         self.idx_asc = idx_asc
+        #: the rows of ``to_df()`` in frame order, once an action fetched them all
+        self._rows: list | None = None
         if traits is None:
             traits = {
                 f.name: infer_traits_for_spark_type(f.name, f.dataType)
@@ -698,12 +711,14 @@ class KevinFrame:
         """Underlying row count — slicing operates on ROWS even in pivot
         form (the reference's slicing works on Indices regardless of
         TitleTrees; only height()/width() switch to leaf counts)."""
-        return self._df.count()
+        return len(self._rows) if self._rows is not None else self._df.count()
 
     def _check_nonempty(self, op: str) -> None:
-        # isEmpty reads at most one partition — head() on a huge frame
-        # must not pay a full count scan
-        if self._df.isEmpty():
+        # the fetched rows answer without a job; otherwise isEmpty reads at
+        # most one partition — head() on a huge frame must not pay a full
+        # count scan
+        empty = not self._rows if self._rows is not None else self._df.isEmpty()
+        if empty:
             raise KevinValueError(f"{op}: empty data frame")
 
     def head(self) -> "KevinFrame":
@@ -719,17 +734,21 @@ class KevinFrame:
         self._check_nonempty("tail")
         return self.drop(1)
 
-    def _last_idx(self):
+    def _last_idx(self, op: str):
         """``__idx`` of the view's last row, found with a reverse-order
         top-1 (TakeOrderedAndProject: per-partition top-1, tiny merge) —
-        no full count, no single-partition shuffle."""
+        no full count, no single-partition shuffle.  The same job checks
+        emptiness: no row raises ``op``'s empty-frame error."""
         rev = []
         for name, asc in self.order_spec:
             c = _q(name)
             rev.append(c.desc_nulls_last() if asc else c.asc_nulls_first())
         idx = F.col(IDX)
         rev.append(idx.desc() if self.idx_asc else idx.asc())
-        return self._df.orderBy(*rev).select(IDX).first()[0]
+        row = self._df.orderBy(*rev).select(IDX).first()
+        if row is None:
+            raise KevinValueError(f"{op}: empty data frame")
+        return row[0]
 
     def init(self) -> "KevinFrame":
         """All but the last row; errors on empty (Combinator.hs:305-307).
@@ -738,9 +757,8 @@ class KevinFrame:
         (one cheap reverse top-1 job) — not count-then-limit, which paid a
         full count and funneled n-1 rows through a global limit."""
         self._require_ordered("init")
-        self._check_nonempty("init")
         return self._derive(
-            self._df.where(F.col(IDX) != F.lit(self._last_idx())), pivot=None
+            self._df.where(F.col(IDX) != F.lit(self._last_idx("init"))), pivot=None
         )
 
     def last(self) -> "KevinFrame":
@@ -748,9 +766,8 @@ class KevinFrame:
         Same single-job shape as ``init`` — an equality filter on the last
         row's ``__idx``."""
         self._require_ordered("last")
-        self._check_nonempty("last")
         return self._derive(
-            self._df.where(F.col(IDX) == F.lit(self._last_idx())), pivot=None
+            self._df.where(F.col(IDX) == F.lit(self._last_idx("last"))), pivot=None
         )
 
     # ------------------------------------------------------------------ #
@@ -759,12 +776,24 @@ class KevinFrame:
 
     def height(self) -> int:
         """Visible row count; on pivot frames, the row-tree leaf count
-        (1 if the row tree is empty) — reference Combinator.hs:278-291."""
+        (1 if the row tree is empty) — reference Combinator.hs:278-291.
+
+        A flat frame whose plan bounds its rows (Catalyst's ``maxRows``)
+        at ``_ROWS_BOUND`` or fewer fetches them with one bounded collect
+        and keeps them, which fixes the frame's rows; any other frame
+        runs a ``count()``."""
         if self.pivot is not None:
             if not self.pivot.row_fields:
                 return 1
             return self._df.select(*[_q(c) for c in self.pivot.row_fields]).distinct().count()
-        return self._df.count()
+        if self._rows is None:
+            m = self._df._jdf.queryExecution().optimizedPlan().maxRows()
+            if not (m.isDefined() and m.get() <= _ROWS_BOUND):
+                return self._df.count()
+            # limit keeps an ordered fetch a TakeOrderedAndProject; a bare
+            # ordered collect plans a range-partitioned sort
+            self._rows = self.to_df().limit(m.get()).collect()
+        return len(self._rows)
 
     def width(self) -> int:
         if self.pivot is not None:
@@ -1204,12 +1233,18 @@ class KevinFrame:
         df = df.withColumn("__ckey", key)
         # ONE distinct job serves both the width guard and the pivot's
         # value list (pivot(values=None) would otherwise run its own
-        # distinct scan — two jobs for the same answer)
+        # distinct scan — two jobs for the same answer).  Keys are ordered
+        # by the col fields' values, NULLs first: the render's header order
+        # (makeTitleTree sorts by value, DataFrame.hs:257-271)
         limit = (max_distinct + 1) if max_distinct is not None else None
-        vals_q = df.select("__ckey").distinct()
+        vals_q = (
+            df.select(*[_q(c) for c in cols], "__ckey")
+            .distinct()
+            .orderBy(*[_q(c) for c in cols])
+        )
         if limit is not None:
             vals_q = vals_q.limit(limit)
-        values = sorted(r["__ckey"] for r in vals_q.collect())
+        values = [r["__ckey"] for r in vals_q.collect()]
         if max_distinct is not None and len(values) > max_distinct:
             raise KevinPivotError(
                 f"pivot would create more than {max_distinct} columns; "
@@ -1232,7 +1267,22 @@ class KevinFrame:
     # ------------------------------------------------------------------ #
 
     def collect(self):
-        return self.to_df().collect()
+        if self._rows is None:
+            rows = self.to_df().collect()
+            if len(rows) > _ROWS_BOUND:
+                return rows
+            self._rows = rows
+        return list(self._rows)
+
+    def _head_rows(self, n: int) -> list:
+        """The first ``n`` rows of ``to_df()``; a fetch that finds no more
+        than ``n`` rows keeps them as the frame's rows."""
+        if self._rows is None:
+            rows = self.to_df().limit(n + 1).collect()
+            if len(rows) > n:
+                return rows[:n]
+            self._rows = rows
+        return self._rows[:n]
 
     def to_pandas(self):
         return self.to_df().toPandas()

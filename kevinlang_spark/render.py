@@ -13,7 +13,10 @@ Reproduces the reference's ``Show DataFrame`` (src/Data/DataFrame.hs:106-172):
   each tree level (makeTitleTree, DataFrame.hs:257-271).
 
 Rendering collects to the driver — it is a presentation action, like the
-reference's ``show``; size is bounded by ``max_rows``.
+reference's ``show``; size is bounded by ``max_rows``.  A flat render reads
+the rows the frame already holds; otherwise it fetches ``max_rows + 1``
+rows, and when that finds the whole frame the frame keeps them, so a later
+``height()`` or render runs no Spark job.
 """
 
 from __future__ import annotations
@@ -95,7 +98,9 @@ def _show_lines(lines: list[list[str]]) -> str:
 
 
 def render_frame(kf, max_rows: int = 100) -> str:
-    """Render a KevinFrame as the reference would ``show`` it."""
+    """Render a KevinFrame as the reference would ``show`` it.  A flat
+    render shares the frame's rows with ``height()`` (see the module
+    docstring); ``height()`` keeps up to ``frame._ROWS_BOUND`` rows."""
     if kf.pivot is not None:
         return _render_pivot(kf, max_rows)
     return _render_flat(kf, max_rows)
@@ -105,7 +110,7 @@ def _render_flat(kf, max_rows: int) -> str:
     cols = kf.columns
     if not cols:
         return "(EMPTY DATAFRAME)\n"
-    rows = kf.to_df().limit(max_rows).collect()
+    rows = kf._head_rows(max_rows)
     header = [""] + cols
     lines = [header]
     for i, r in enumerate(rows, start=1):

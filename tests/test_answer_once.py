@@ -1,0 +1,181 @@
+"""A frame's answer is fetched once: the first action that reads all of a
+frame's rows keeps them on the frame, so ``height()``, ``render_frame`` and
+``collect()`` share one bounded collect, and ``last()``/``init()`` check
+emptiness inside the job that finds the last row.  Job counts are exact
+(``test_csv_cache._jobs``)."""
+
+from __future__ import annotations
+
+import pytest
+
+from kevinlang_spark import KevinFrame, SortOrder
+from kevinlang_spark.errors import KevinValueError
+from kevinlang_spark.render import render_frame
+from kevinlang_spark.sources.csv import read_csv
+from test_csv_cache import _jobs, _write
+
+
+def _top_cities(frame, k: int = 3):
+    """filter → groupby → aggregate → sort → take(k), the shape of an
+    analyst's top-k question."""
+    g = frame.filter("sale", lambda c: c > 1100).groupby(["city"])
+    return g.aggregate("sum", "sale").sort("sale", SortOrder.DESCENDING).take(k)
+
+
+def _city_sums(frame):
+    """A grouped aggregate: Catalyst cannot bound its row count."""
+    return frame.groupby(["city"]).aggregate("sum", "sale")
+
+
+def _plan_max_rows(kf):
+    m = kf.df._jdf.queryExecution().optimizedPlan().maxRows()
+    return m.get() if m.isDefined() else None
+
+
+def test_height_then_render_runs_one_bounded_collect(spark, simple_frame):
+    assert _plan_max_rows(_top_cities(simple_frame)) == 3
+    want_jobs, _ = _jobs(spark, lambda: _top_cities(simple_frame).to_df().limit(3).collect())
+    f = _top_cities(simple_frame)
+    jobs, (height, text) = _jobs(spark, lambda: (f.height(), render_frame(f)))
+    assert jobs == want_jobs
+    again, (height2, text2, rows) = _jobs(
+        spark, lambda: (f.height(), render_frame(f), f.collect())
+    )
+    assert again == 0
+    fresh = _top_cities(simple_frame)
+    assert height == height2 == fresh.to_df().count() == 3
+    assert rows == fresh.to_df().limit(100).collect()
+    assert text == text2 == render_frame(_top_cities(simple_frame))
+
+
+def test_render_first_then_height_runs_no_job(spark, simple_frame):
+    f = _city_sums(simple_frame)
+    text = render_frame(f)
+    jobs, height = _jobs(spark, f.height)
+    assert jobs == 0
+    assert height == 3
+    assert len(text.splitlines()) == 1 + height
+
+
+def test_collect_keeps_rows(spark, simple_frame):
+    f = simple_frame.take(13)
+    rows = f.collect()
+    jobs, (height, again) = _jobs(spark, lambda: (f.height(), f.collect()))
+    assert jobs == 0
+    assert height == 13
+    assert again == rows and again is not rows
+
+
+def test_unbounded_frame_runs_todays_jobs(spark, simple_frame):
+    """maxRows unknown: a count() plus a limit(max_rows) collect, as before."""
+    assert _plan_max_rows(_city_sums(simple_frame)) is None
+    count_jobs, _ = _jobs(spark, lambda: _city_sums(simple_frame).df.count())
+    head_jobs, _ = _jobs(spark, lambda: _city_sums(simple_frame).to_df().limit(100).collect())
+    f = _city_sums(simple_frame)
+    jobs, _ = _jobs(spark, lambda: (f.height(), render_frame(f)))
+    assert jobs == count_jobs + head_jobs
+
+
+def test_frame_above_bound_runs_todays_jobs(spark):
+    def build():
+        return KevinFrame.from_df(spark.range(20000)).take(10001)
+
+    assert _plan_max_rows(build()) == 10001
+    count_jobs, _ = _jobs(spark, lambda: build().df.count())
+    head_jobs, _ = _jobs(spark, lambda: build().to_df().limit(100).collect())
+    f = build()
+    jobs, (height, text) = _jobs(spark, lambda: (f.height(), render_frame(f)))
+    assert jobs == count_jobs + head_jobs
+    assert height == 10001
+    assert len(text.splitlines()) == 101
+    # a render that found more than max_rows rows keeps nothing
+    jobs, height = _jobs(spark, f.height)
+    assert jobs == count_jobs
+    assert height == 10001
+
+
+def test_derived_frame_runs_its_own_jobs(spark, simple_frame):
+    f = simple_frame.take(10)
+    f.height()
+    jobs, height = _jobs(spark, lambda: f.take(3).height())
+    assert jobs > 0
+    assert height == 3
+
+
+def test_stored_rows_answer_checks_and_zip_height(spark, simple_frame):
+    f = simple_frame.take(5)
+    g = simple_frame.drop(8).take(5)
+    f.height()
+    g.height()
+    jobs, (tail, zipped, size) = _jobs(spark, lambda: (f.tail(), f.join(g), f.size()))
+    assert jobs == 0
+    assert size == (5, 7)
+    assert tail.height() == 4
+    assert zipped.height() == 5
+
+
+@pytest.mark.parametrize("op", ["last", "init"])
+def test_last_and_init_run_one_eager_job(spark, simple_frame, op):
+    f = simple_frame.take(13)
+    jobs, out = _jobs(spark, lambda: getattr(f, op)())
+    assert jobs == 1
+    assert out.height() == (1 if op == "last" else 12)
+
+
+@pytest.mark.parametrize("op", ["head", "tail", "init", "last"])
+@pytest.mark.parametrize("fetched", [False, True])
+def test_empty_frame_errors_unchanged(simple_frame, op, fetched):
+    empty = simple_frame.take(0)
+    if fetched:
+        assert empty.height() == 0
+    with pytest.raises(KevinValueError, match=f"^{op}: empty data frame$"):
+        getattr(empty, op)()
+
+
+def test_render_shows_the_rows_height_counted(spark, tmp_path):
+    path = _write(tmp_path / "o.csv", "store,qty\n" + "".join(f"s{i},{i}\n" for i in range(6)))
+    f = read_csv(spark, path).take(4)
+    assert f.height() == 4
+    _write(tmp_path / "o.csv", "store,qty\nzz,100\n", age_s=None)
+    text = render_frame(f)
+    assert [l.split()[1] for l in text.splitlines()[1:]] == ["s0", "s1", "s2", "s3"]
+    assert f.height() == 4
+
+
+# --- pivot_table column order is the render's header order ---
+
+
+def _header_values(text: str, n_lines: int) -> list[list[str]]:
+    """The value tokens of the first ``n_lines`` col-tree header lines."""
+    return [line.split()[1:] for line in text.splitlines()[:n_lines]]
+
+
+def test_pivot_table_orders_numeric_columns_by_value(spark):
+    df = spark.createDataFrame(
+        [("a", c, c * 10) for c in (11, 2, 10, 1, 9)] + [("b", 2, 5)],
+        "s string, c int, v int",
+    )
+    p = KevinFrame.from_df(df).cast(["s"], ["c"], "sum", "v")
+    cols = p.pivot_table().columns
+    assert cols == ["s", "1", "2", "9", "10", "11"]
+    assert _header_values(p.render(), 1) == [cols[1:]]
+
+
+def test_pivot_table_orders_two_col_fields_like_render(spark):
+    df = spark.createDataFrame(
+        [
+            ("a", 10, 3, 1.0),
+            ("a", 2, 20, 2.0),
+            ("b", 2, 3, 3.0),
+            ("b", None, 20, 4.0),
+            ("a", 10, 20, 5.0),
+            ("b", 1, 3, 6.0),
+        ],
+        "s string, c1 int, c2 int, v double",
+    )
+    p = KevinFrame.from_df(df).cast(["s"], ["c1", "c2"], "sum", "v")
+    keys = [k.replace("\x00null", "empty").split("\x1f") for k in p.pivot_table().columns[1:]]
+    assert keys == [["empty", "20"], ["1", "3"], ["2", "3"], ["2", "20"], ["10", "3"], ["10", "20"]]
+    c1_line, c2_line = _header_values(p.render(), 2)
+    assert c1_line == list(dict.fromkeys(k[0] for k in keys))
+    assert c2_line == [k[1] for k in keys]
