@@ -20,8 +20,8 @@ carries the state Spark does not:
   by ``groupby``, consumed by ``aggregate``; realized as ``df.groupBy`` only
   at aggregation time so Catalyst sees one logical plan.
 - **pivot**: ``(row_fields, col_fields, value_field)`` (reference TitleTrees,
-  DataFrame.hs:42) — pure presentation state consumed by the crosstab
-  renderer.
+  DataFrame.hs:42) — pure presentation state consumed by ``pivot_table``
+  and the crosstab renderer, which both read ``_crosstab``.
 
 Everything else is a lazy Catalyst plan: each combinator returns a new
 wrapper over a transformed ``pyspark.sql.DataFrame``; nothing executes until
@@ -67,6 +67,9 @@ OrderSpec = tuple[tuple[str, bool], ...]
 
 #: most rows an action fetches to keep on the frame as its answer
 _ROWS_BOUND = 10_000
+
+#: the reference's error for a crosstab cell with two values (DataFrame.hs:145)
+MANY_VALUES = "invalid data (many values for the same index)"
 
 
 class SortOrder(enum.Enum):
@@ -454,42 +457,7 @@ class KevinFrame:
         a lazy order spec — NO window, NO extra shuffle beyond the groupBy
         itself, so this is safe at any group cardinality.
         """
-        if field not in self.columns:
-            raise KevinFieldError("no such field")
-        fn, kind = agglib.resolve(agg)
-        self._check_agg_kind(field, kind)
-        out_name = alias or field
-
-        base = self
-        if isinstance(agg, str) and agg == "concat" and self.ordered:
-            base = self._materialized()
-        idx_col = F.col(IDX) if base.ordered else None
-        expr = fn(_q(field), idx_col).alias(out_name)
-
-        if base.group_cols:
-            out = base._df.groupBy(*[_q(k) for k in base.group_cols]).agg(expr)
-            spec = tuple((k, True) for k in base.group_cols)
-        else:
-            out = base._df.agg(expr)
-            spec = ()
-        traits = {k: base.traits[k] for k in base.group_cols if k in base.traits}
-        # trait follows the OUTPUT dtype: min/max and custom callables can
-        # yield strings (labeling them numeric would break append's
-        # trait-equality check and the renderer)
-        out_dtype = out.schema[out_name].dataType
-        traits[out_name] = (
-            TEXT_DIM if isinstance(out_dtype, T.StringType) else NUM_MEASURE
-        )
-        if base.ordered:
-            out = self._stable_agg_idx(out, base.group_cols)
-        return self._derive(
-            out,
-            traits=traits,
-            group_cols=(),
-            pivot=None,
-            order_spec=spec,
-            idx_asc=True,
-        )
+        return self.aggregate_many([(agg, field, alias)])
 
     def aggregate_many(self, specs) -> "KevinFrame":
         """Grouped aggregation of MANY columns in ONE ``groupBy`` — a
@@ -739,13 +707,12 @@ class KevinFrame:
         top-1 (TakeOrderedAndProject: per-partition top-1, tiny merge) —
         no full count, no single-partition shuffle.  The same job checks
         emptiness: no row raises ``op``'s empty-frame error."""
-        rev = []
-        for name, asc in self.order_spec:
-            c = _q(name)
-            rev.append(c.desc_nulls_last() if asc else c.asc_nulls_first())
-        idx = F.col(IDX)
-        rev.append(idx.desc() if self.idx_asc else idx.asc())
-        row = self._df.orderBy(*rev).select(IDX).first()
+        rev = self._derive(
+            self._df,
+            order_spec=tuple((n, not asc) for n, asc in self.order_spec),
+            idx_asc=not self.idx_asc,
+        )
+        row = self._df.orderBy(*rev._order_cols()).select(IDX).first()
         if row is None:
             raise KevinValueError(f"{op}: empty data frame")
         return row[0]
@@ -1187,7 +1154,10 @@ class KevinFrame:
         Guards per Combinator.hs:271-272: row/col overlap → error; value
         field among row/col fields → error.  We realize the data as the
         grouped aggregation (long form) and carry pivot state; the crosstab
-        widening happens in ``pivot_table`` / the renderer.
+        widening happens in ``pivot_table``, which the renderer reads.
+        Every (row, col) cell of a cast holds one aggregated row; a frame
+        put in pivot form by other ops may not, and a cell with two rows
+        raises when the table is computed (see ``pivot_table``).
         """
         rows = _as_name_list(row_fields)
         cols = _as_name_list(col_fields)
@@ -1203,64 +1173,69 @@ class KevinFrame:
         out = self.groupby(rows + cols).aggregate(agg, value_field)
         return out._derive(out._df, pivot=PivotState(tuple(rows), tuple(cols), value_field))
 
-    def pivot_table(self, max_distinct: int = 10000) -> DataFrame:
-        """Materialize the crosstab for a frame in pivot form:
-        ``groupBy(row_fields).pivot(col-values).agg(first(value))`` —
-        reference crosstab semantics (DataFrame.hs:128-172): each cell is
-        the value of the single row at that (row-path, col-path); NULL if
-        none.  ``max_distinct`` bounds the pivot width (at scale a pivot to
-        millions of columns is a modeling error, not a query)."""
-        if self.pivot is None:
-            raise KevinPivotError("not in pivot form")
-        rows, cols, val = (
-            list(self.pivot.row_fields),
-            list(self.pivot.col_fields),
-            self.pivot.value_field,
+    def _crosstab(self, limit: int | None) -> tuple[list[tuple], DataFrame]:
+        """The crosstab of a frame in pivot form, as ``pivot_table`` and the
+        renderer both read it (reference TitleTrees, DataFrame.hs:128-172).
+
+        Returns the col tree's leaf paths, sorted by value with NULLs first
+        (makeTitleTree, DataFrame.hs:257-271), at most ``limit`` of them,
+        and the wide table: one row per row-tree leaf, ordered by the row
+        fields, then one cell per returned col path.  Finding the paths is
+        the one eager action; the wide table is lazy, and a cell that more
+        than one row lands in raises the reference's "invalid data (many
+        values for the same index)" (DataFrame.hs:145) when it is computed.
+        """
+        rows = [_q(c) for c in self.pivot.row_fields]
+        cols = [_q(c) for c in self.pivot.col_fields]
+        val = self.pivot.value_field
+        cell = (
+            F.when(F.count(F.lit(1)) > 1, F.raise_error(F.lit(MANY_VALUES)))
+            .otherwise(F.first(_q(val)))
+            .alias(val)
         )
         df = self._df
+        if not rows:
+            # one wide row, and valid input holds at most one row per col
+            # path: a single partition runs it without an exchange
+            df = df.coalesce(1)
         if not cols:
-            out = df.select(*[_q(c) for c in rows], _q(val))
-            if rows:
-                out = out.orderBy(*[_q(c) for c in rows])
-            return out
-        # NULL-safe, collision-safe column key: coalesce NULLs to a marker
-        # and join with a unit separator (plain concat_ws would collapse
-        # ('a', NULL) and (NULL, 'a'), and 'a/b' with ('a','b'))
-        key = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(_q(c).cast("string"), F.lit("\x00null")) for c in cols],
-        ).alias("__ckey")
-        df = df.withColumn("__ckey", key)
-        # ONE distinct job serves both the width guard and the pivot's
-        # value list (pivot(values=None) would otherwise run its own
-        # distinct scan — two jobs for the same answer).  Keys are ordered
-        # by the col fields' values, NULLs first: the render's header order
-        # (makeTitleTree sorts by value, DataFrame.hs:257-271)
+            paths, gb = [], df.groupBy(*rows)
+        else:
+            # NULL-safe, collision-safe column key: coalesce NULLs to a
+            # marker and join with a unit separator (plain concat_ws would
+            # collapse ('a', NULL) and (NULL, 'a'), and 'a/b' with ('a','b'))
+            df = df.withColumn("__ckey", F.concat_ws(
+                "\x1f", *[F.coalesce(c.cast("string"), F.lit("\x00null")) for c in cols]
+            ))
+            # the same distinct serves the caller's width limit and the
+            # pivot's value list (pivot(values=None) runs its own distinct)
+            q = df.select(*cols, "__ckey").distinct().orderBy(*cols)
+            found = (q if limit is None else q.limit(limit)).collect()
+            paths = [tuple(r)[:-1] for r in found]
+            gb = df.groupBy(*rows).pivot("__ckey", [r[-1] for r in found])
+        wide = gb.agg(cell)
+        return paths, wide.orderBy(*rows) if rows else wide
+
+    def pivot_table(self, max_distinct: int = 10000) -> DataFrame:
+        """Materialize the crosstab for a frame in pivot form:
+        ``groupBy(row_fields).pivot(col-values)`` — reference crosstab
+        semantics (DataFrame.hs:128-172): each cell is the value of the
+        single row at that (row-path, col-path); NULL if none.  A cell
+        that holds more than one row raises ``SparkRuntimeException``
+        (``USER_RAISED_EXCEPTION``, "invalid data (many values for the same
+        index)") when the table is computed.  ``max_distinct`` bounds the
+        pivot width (at scale a pivot to millions of columns is a modeling
+        error, not a query)."""
+        if self.pivot is None:
+            raise KevinPivotError("not in pivot form")
         limit = (max_distinct + 1) if max_distinct is not None else None
-        vals_q = (
-            df.select(*[_q(c) for c in cols], "__ckey")
-            .distinct()
-            .orderBy(*[_q(c) for c in cols])
-        )
-        if limit is not None:
-            vals_q = vals_q.limit(limit)
-        values = [r["__ckey"] for r in vals_q.collect()]
-        if max_distinct is not None and len(values) > max_distinct:
+        paths, wide = self._crosstab(limit)
+        if max_distinct is not None and len(paths) > max_distinct:
             raise KevinPivotError(
                 f"pivot would create more than {max_distinct} columns; "
                 "a pivot this wide is a modeling error at scale"
             )
-        gb = (
-            df.groupBy(*[_q(c) for c in rows])
-            if rows
-            else df.groupBy(F.lit(1).alias("__all"))
-        )
-        out = gb.pivot("__ckey", values=values).agg(F.first(_q(val)))
-        if rows:
-            out = out.orderBy(*[_q(c) for c in rows])
-        else:
-            out = out.drop("__all")
-        return out
+        return wide
 
     # ------------------------------------------------------------------ #
     # actions / conversion

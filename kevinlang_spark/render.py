@@ -10,7 +10,10 @@ Reproduces the reference's ``Show DataFrame`` (src/Data/DataFrame.hs:106-172):
   (DataFrame.hs:107);
 - pivot form: nested row/column title-tree headers over a value matrix
   (DataFrame.hs:128-172), headers being the *sorted distinct* values of
-  each tree level (makeTitleTree, DataFrame.hs:257-271).
+  each tree level (makeTitleTree, DataFrame.hs:257-271).  The headers and
+  cells are the first ``max_rows`` col paths and rows of the wide table
+  ``pivot_table`` computes (``KevinFrame._crosstab``); this module runs no
+  crosstab query of its own.
 
 Rendering collects to the driver — it is a presentation action, like the
 reference's ``show``; size is bounded by ``max_rows``.  A flat render reads
@@ -23,7 +26,10 @@ from __future__ import annotations
 
 import math
 
+from pyspark.errors import SparkRuntimeException
+
 from kevinlang_spark.errors import KevinValueError
+from kevinlang_spark.frame import MANY_VALUES
 from kevinlang_spark.traits import DataInterpretation, FieldTraits
 
 
@@ -126,49 +132,26 @@ def _render_flat(kf, max_rows: int) -> str:
 def _render_pivot(kf, max_rows: int) -> str:
     """Crosstab: sorted-distinct headers per tree level, value matrix cells.
 
-    The header hierarchies are computed with ONE distinct() per tree (not
-    per level) and the matrix with one groupBy().pivot() job.
+    Reads the first ``max_rows`` col paths and rows of the wide table that
+    ``pivot_table`` computes (``KevinFrame._crosstab``): its col paths,
+    then one bounded collect of the row paths and their cells.
+    A cell with two values raises the reference's ``KevinValueError``.
     """
     rows_f = list(kf.pivot.row_fields)
     cols_f = list(kf.pivot.col_fields)
-    val = kf.pivot.value_field
-    # leaf paths, sorted — the title trees' leaf order (DataFrame.hs:266)
-    from kevinlang_spark.frame import _q
-
-    def paths(fields):
-        if not fields:
-            return []
-        df = (
-            kf.df.select(*[_q(f) for f in fields])
-            .distinct()
-            .orderBy(*[_q(f) for f in fields])
-            .limit(max_rows)
-        )
-        return [tuple(r[f] for f in fields) for r in df.collect()]
-
-    row_paths = paths(rows_f)
-    col_paths = paths(cols_f)
-
-    # collect ONLY rows belonging to the displayed grid (an arbitrary
-    # limit() sample could miss displayed cells and falsely render 'empty')
-    from pyspark.sql import functions as F
-
-    data_df = kf.df.select(*[_q(c) for c in (*rows_f, *cols_f, val)])
-    if rows_f and len(row_paths) >= max_rows:
-        key_col = F.concat_ws("\x1f", *[_q(f).cast("string") for f in rows_f])
-        wanted = [
-            "\x1f".join("" if v is None else str(v) for v in p) for p in row_paths
-        ]
-        data_df = data_df.where(key_col.isin(wanted))
-    cells: dict[tuple, dict[tuple, object]] = {}
-    for r in data_df.collect():
-        rk = tuple(r[f] for f in rows_f)
-        ck = tuple(r[f] for f in cols_f)
-        if rk in cells and ck in cells[rk]:
-            # reference: "invalid data (many values for the same index)"
-            # (DataFrame.hs:145) — never silently last-wins
-            raise KevinValueError("invalid data (many values for the same index)")
-        cells.setdefault(rk, {})[ck] = r[val]
+    col_paths, wide = kf._crosstab(max_rows)
+    try:
+        wide_rows = wide.limit(max_rows).collect()
+    except SparkRuntimeException as e:
+        if e.getMessageParameters().get("errorMessage") != MANY_VALUES:
+            raise
+        raise KevinValueError(MANY_VALUES) from None
+    # row paths lead each wide row, its cells follow in col_paths order
+    n = len(rows_f)
+    row_paths = [tuple(r)[:n] for r in wide_rows] if rows_f else []
+    cells = {
+        tuple(r)[:n]: dict(zip(col_paths or [()], tuple(r)[n:])) for r in wide_rows
+    }
 
     def hfmt(v, field):
         return _fmt_header(v)
