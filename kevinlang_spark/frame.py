@@ -20,8 +20,9 @@ carries the state Spark does not:
   by ``groupby``, consumed by ``aggregate``; realized as ``df.groupBy`` only
   at aggregation time so Catalyst sees one logical plan.
 - **pivot**: ``(row_fields, col_fields, value_field)`` (reference TitleTrees,
-  DataFrame.hs:42) — pure presentation state consumed by ``pivot_table``
-  and the crosstab renderer, which both read ``_crosstab``.
+  DataFrame.hs:42) — pure presentation state consumed by ``pivot_table``,
+  the crosstab renderer and pivot ``height``/``width``, which all read the
+  crosstab's cells from one kept fetch (``_kept_cells``).
 
 Everything else is a lazy Catalyst plan: each combinator returns a new
 wrapper over a transformed ``pyspark.sql.DataFrame``; nothing executes until
@@ -38,10 +39,12 @@ from __future__ import annotations
 import enum
 import importlib
 import inspect
+import math
 from dataclasses import dataclass
 from typing import Callable, Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,6 +75,11 @@ _ROWS_BOUND = 10_000
 MANY_VALUES = "invalid data (many values for the same index)"
 
 
+def _many_values(e: SparkRuntimeException) -> bool:
+    """Whether ``e`` is a crosstab cell's ``MANY_VALUES`` guard firing."""
+    return e.getMessageParameters().get("errorMessage") == MANY_VALUES
+
+
 class SortOrder(enum.Enum):
     ASCENDING = "asc"
     DESCENDING = "desc"
@@ -85,6 +93,31 @@ class PivotState:
     row_fields: tuple[str, ...]
     col_fields: tuple[str, ...]
     value_field: str
+
+
+@dataclass(frozen=True)
+class _Cells:
+    """A crosstab's cells as one long fetch returns them: the row paths in
+    order, the col paths in sort order with their pivot keys (``()`` and
+    ``None`` when the col tree is empty), and the value of each non-empty
+    cell by (row, col) position."""
+
+    rows: list[tuple]
+    cols: list[tuple]
+    keys: list[str | None]
+    values: dict[tuple[int, int], object]
+
+
+def _order_key(v):
+    """Sort key giving Spark's ascending NULLS FIRST order (NaN after
+    +inf, arrays and structs element by element) to collected values."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and math.isnan(v):
+        return (2,)
+    if isinstance(v, (list, tuple)):
+        return (1, tuple(_order_key(e) for e in v))
+    return (1, v)
 
 
 def _as_name_list(names) -> list[str]:
@@ -117,8 +150,11 @@ class KevinFrame:
     rows, or a render of at most ``max_rows``.  Later actions on the same
     frame read them and run no Spark job, and a source rewritten in
     between is not read again — as the reference's ``height`` and
-    ``show`` read one in-memory frame (DataFrame.hs:65-172).  A derived
-    frame starts without rows."""
+    ``show`` read one in-memory frame (DataFrame.hs:65-172).  A frame in
+    pivot form keeps its crosstab's cells the same way: the first of
+    ``pivot_table``, a render, ``height`` or ``width`` fetches them once
+    (at most ``_ROWS_BOUND`` cells) and the others read them.  A derived
+    frame starts without rows or cells."""
 
     def __init__(
         self,
@@ -143,6 +179,8 @@ class KevinFrame:
         self.idx_asc = idx_asc
         #: the rows of ``to_df()`` in frame order, once an action fetched them all
         self._rows: list | None = None
+        #: the crosstab's cells once fetched; False when they exceed _ROWS_BOUND
+        self._cells: _Cells | bool | None = None
         if traits is None:
             traits = {
                 f.name: infer_traits_for_spark_type(f.name, f.dataType)
@@ -747,27 +785,53 @@ class KevinFrame:
 
         A flat frame whose plan bounds its rows (Catalyst's ``maxRows``)
         at ``_ROWS_BOUND`` or fewer fetches them with one bounded collect
-        and keeps them, which fixes the frame's rows; any other frame
-        runs a ``count()``."""
+        and keeps them, which fixes the frame's rows.  Any other ordered
+        frame fetches its first ``_ROWS_BOUND + 1`` rows in one job whose
+        plan also counts every row (``DataFrame.observe`` under the top-k
+        sort, which reads them all): a count within the bound keeps the
+        rows, a larger one is returned and nothing is kept.  An unordered
+        frame runs a ``count()``.  A pivot frame counts the row paths of
+        its kept crosstab cells (see ``_kept_cells``)."""
         if self.pivot is not None:
-            if not self.pivot.row_fields:
-                return 1
-            return self._df.select(*[_q(c) for c in self.pivot.row_fields]).distinct().count()
+            return self._leaf_count(self.pivot.row_fields, "rows")
         if self._rows is None:
             m = self._df._jdf.queryExecution().optimizedPlan().maxRows()
-            if not (m.isDefined() and m.get() <= _ROWS_BOUND):
-                return self._df.count()
             # limit keeps an ordered fetch a TakeOrderedAndProject; a bare
             # ordered collect plans a range-partitioned sort
-            self._rows = self.to_df().limit(m.get()).collect()
+            if m.isDefined() and m.get() <= _ROWS_BOUND:
+                self._rows = self.to_df().limit(m.get()).collect()
+            elif not self.ordered:
+                return self._df.count()
+            else:
+                seen = Observation()
+                counted = self._derive(self._df.observe(seen, F.count(F.lit(1)).alias("n")))
+                rows = counted.to_df().limit(_ROWS_BOUND + 1).collect()
+                n = seen.get["n"]
+                if n > _ROWS_BOUND:
+                    return n
+                self._rows = rows
         return len(self._rows)
 
     def width(self) -> int:
         if self.pivot is not None:
-            if not self.pivot.col_fields:
-                return 1
-            return self._df.select(*[_q(c) for c in self.pivot.col_fields]).distinct().count()
+            return self._leaf_count(self.pivot.col_fields, "cols")
         return len(self.columns)
+
+    def _leaf_count(self, fields: Sequence[str], paths: str) -> int:
+        """Leaf count of a title tree (1 if it is empty): its paths among
+        the kept crosstab cells, else a distinct count — also when a cell
+        holds two rows, which only the crosstab itself rejects."""
+        if not fields:
+            return 1
+        try:
+            cells = self._kept_cells()
+        except SparkRuntimeException as e:
+            if not _many_values(e):
+                raise
+            cells = None
+        if cells is None:
+            return self._df.select(*[_q(c) for c in fields]).distinct().count()
+        return len(getattr(cells, paths))
 
     def size(self) -> tuple[int, int]:
         return (self.height(), self.width())
@@ -1173,27 +1237,83 @@ class KevinFrame:
         out = self.groupby(rows + cols).aggregate(agg, value_field)
         return out._derive(out._df, pivot=PivotState(tuple(rows), tuple(cols), value_field))
 
-    def _crosstab(self, limit: int | None) -> tuple[list[tuple], DataFrame]:
-        """The crosstab of a frame in pivot form, as ``pivot_table`` and the
-        renderer both read it (reference TitleTrees, DataFrame.hs:128-172).
+    def _keyed(self) -> DataFrame:
+        """The frame's rows, plus ``__ckey`` — the pivot key of each row's
+        col path — when the col tree is not empty.  The key is NULL-safe
+        and collision-safe: NULLs coalesce to a marker and values join
+        with a unit separator (plain concat_ws would collapse ('a', NULL)
+        and (NULL, 'a'), and 'a/b' with ('a','b'))."""
+        if not self.pivot.col_fields:
+            return self._df
+        return self._df.withColumn("__ckey", F.concat_ws("\x1f", *[
+            F.coalesce(_q(c).cast("string"), F.lit("\x00null")) for c in self.pivot.col_fields
+        ]))
 
-        Returns the col tree's leaf paths, sorted by value with NULLs first
-        (makeTitleTree, DataFrame.hs:257-271), at most ``limit`` of them,
-        and the wide table: one row per row-tree leaf, ordered by the row
-        fields, then one cell per returned col path.  Finding the paths is
-        the one eager action; the wide table is lazy, and a cell that more
-        than one row lands in raises the reference's "invalid data (many
-        values for the same index)" (DataFrame.hs:145) when it is computed.
-        """
-        rows = [_q(c) for c in self.pivot.row_fields]
-        cols = [_q(c) for c in self.pivot.col_fields]
+    def _cell(self) -> Column:
+        """A crosstab cell: the value of its one row; a cell that more than
+        one row lands in raises the reference's "invalid data (many values
+        for the same index)" (DataFrame.hs:145) when it is computed."""
         val = self.pivot.value_field
-        cell = (
+        return (
             F.when(F.count(F.lit(1)) > 1, F.raise_error(F.lit(MANY_VALUES)))
             .otherwise(F.first(_q(val)))
             .alias(val)
         )
-        df = self._df
+
+    def _kept_cells(self) -> _Cells | None:
+        """The crosstab's cells (reference TitleTrees, DataFrame.hs:128-172),
+        fetched once and kept; None when there are more than ``_ROWS_BOUND``.
+
+        One job groups by the row and col fields, guards each cell
+        (``_cell``, so a cell with two rows raises here) and takes the
+        first ``_ROWS_BOUND + 1`` cells ordered by row then col fields.
+        The col paths are sorted on the driver in Spark's ascending NULLS
+        FIRST order (makeTitleTree, DataFrame.hs:257-271); their pivot
+        keys come from Spark (``__ckey``), never from ``str()``."""
+        if self._cells is None:
+            nr = len(self.pivot.row_fields)
+            nc = len(self.pivot.col_fields)
+            by = [_q(c) for c in self.pivot.row_fields + self.pivot.col_fields]
+            q = self._keyed().groupBy(*by).agg(
+                self._cell(), *([F.first("__ckey")] if nc else [])
+            )
+            got = (q.orderBy(*by) if by else q).limit(_ROWS_BOUND + 1).collect()
+            if len(got) > _ROWS_BOUND:
+                self._cells = False
+                return None
+            rows, paths, found = [], {}, []
+            for r in got:
+                path = r[:nr]
+                # NaN != NaN: paths that differ are compared by sort key
+                if not rows or (path != rows[-1] and _order_key(path) != _order_key(rows[-1])):
+                    rows.append(path)
+                key = r[-1] if nc else None
+                if key not in paths:
+                    paths[key] = r[nr : nr + nc]
+                found.append((len(rows) - 1, key, r[nr + nc]))
+            keys = sorted(paths, key=lambda k: _order_key(paths[k]))
+            at = {k: j for j, k in enumerate(keys)}
+            self._cells = _Cells(
+                rows, [paths[k] for k in keys], keys,
+                {(i, at[k]): v for i, k, v in found},
+            )
+        return self._cells or None
+
+    def _crosstab(self, limit: int | None) -> tuple[list[tuple], DataFrame]:
+        """The crosstab of a frame in pivot form as a wide table.
+
+        Returns the col tree's leaf paths, sorted by value with NULLs first
+        (makeTitleTree, DataFrame.hs:257-271), at most ``limit`` of them,
+        and the lazy wide table: one row per row-tree leaf, ordered by the
+        row fields, then one cell per returned col path.  The paths and
+        pivot keys come from the kept cells (``_kept_cells``); only when
+        those exceed ``_ROWS_BOUND`` does a distinct find them, and the
+        table is then sorted with ``orderBy`` instead of on one partition.
+        """
+        rows = [_q(c) for c in self.pivot.row_fields]
+        cols = [_q(c) for c in self.pivot.col_fields]
+        cells = self._kept_cells()
+        df = self._keyed()
         if not rows:
             # one wide row, and valid input holds at most one row per col
             # path: a single partition runs it without an exchange
@@ -1201,31 +1321,51 @@ class KevinFrame:
         if not cols:
             paths, gb = [], df.groupBy(*rows)
         else:
-            # NULL-safe, collision-safe column key: coalesce NULLs to a
-            # marker and join with a unit separator (plain concat_ws would
-            # collapse ('a', NULL) and (NULL, 'a'), and 'a/b' with ('a','b'))
-            df = df.withColumn("__ckey", F.concat_ws(
-                "\x1f", *[F.coalesce(c.cast("string"), F.lit("\x00null")) for c in cols]
-            ))
-            # the same distinct serves the caller's width limit and the
-            # pivot's value list (pivot(values=None) runs its own distinct)
-            q = df.select(*cols, "__ckey").distinct().orderBy(*cols)
-            found = (q if limit is None else q.limit(limit)).collect()
-            paths = [tuple(r)[:-1] for r in found]
-            gb = df.groupBy(*rows).pivot("__ckey", [r[-1] for r in found])
-        wide = gb.agg(cell)
-        return paths, wide.orderBy(*rows) if rows else wide
+            if cells is not None:
+                paths, keys = cells.cols[:limit], cells.keys[:limit]
+            else:
+                q = df.select(*cols, "__ckey").distinct().orderBy(*cols)
+                found = (q if limit is None else q.limit(limit)).collect()
+                paths, keys = [tuple(r)[:-1] for r in found], [r[-1] for r in found]
+            gb = df.groupBy(*rows).pivot("__ckey", keys)
+        wide = gb.agg(self._cell())
+        if not rows:
+            return paths, wide
+        if cells is None:
+            return paths, wide.orderBy(*rows)
+        # at most _ROWS_BOUND wide rows: one partition sorts them without
+        # the range exchange (and its sampling job) of orderBy
+        return paths, wide.coalesce(1).sortWithinPartitions(*rows)
+
+    def _crosstab_grid(self, n: int) -> tuple[list[tuple], list[tuple], list[tuple]]:
+        """The first ``n`` row paths and col paths of the crosstab, and
+        their cells row by row — what a render draws.  With the kept cells
+        this runs no job; otherwise it reads ``_crosstab``'s wide table."""
+        cells = self._kept_cells()
+        if cells is not None:
+            rows, cols = cells.rows[:n], cells.cols[:n]
+            grid = [
+                tuple(cells.values.get((i, j)) for j in range(len(cols)))
+                for i in range(len(rows))
+            ]
+            return rows, cols, grid
+        nr = len(self.pivot.row_fields)
+        paths, wide = self._crosstab(n)
+        got = [tuple(r) for r in wide.limit(n).collect()]
+        return [r[:nr] for r in got], paths, [r[nr:] for r in got]
 
     def pivot_table(self, max_distinct: int = 10000) -> DataFrame:
         """Materialize the crosstab for a frame in pivot form:
         ``groupBy(row_fields).pivot(col-values)`` — reference crosstab
         semantics (DataFrame.hs:128-172): each cell is the value of the
-        single row at that (row-path, col-path); NULL if none.  A cell
-        that holds more than one row raises ``SparkRuntimeException``
-        (``USER_RAISED_EXCEPTION``, "invalid data (many values for the same
-        index)") when the table is computed.  ``max_distinct`` bounds the
-        pivot width (at scale a pivot to millions of columns is a modeling
-        error, not a query)."""
+        single row at that (row-path, col-path); NULL if none.  The call
+        fetches the crosstab's cells once (``_kept_cells``) for the col
+        values, so a cell that holds more than one row raises
+        ``SparkRuntimeException`` (``USER_RAISED_EXCEPTION``, "invalid
+        data (many values for the same index)") here, and a later render,
+        ``height`` or ``width`` of this frame runs no Spark job.
+        ``max_distinct`` bounds the pivot width (at scale a pivot to
+        millions of columns is a modeling error, not a query)."""
         if self.pivot is None:
             raise KevinPivotError("not in pivot form")
         limit = (max_distinct + 1) if max_distinct is not None else None

@@ -11,9 +11,11 @@ Reproduces the reference's ``Show DataFrame`` (src/Data/DataFrame.hs:106-172):
 - pivot form: nested row/column title-tree headers over a value matrix
   (DataFrame.hs:128-172), headers being the *sorted distinct* values of
   each tree level (makeTitleTree, DataFrame.hs:257-271).  The headers and
-  cells are the first ``max_rows`` col paths and rows of the wide table
-  ``pivot_table`` computes (``KevinFrame._crosstab``); this module runs no
-  crosstab query of its own.
+  cells are the first ``max_rows`` row paths and col paths of the crosstab
+  cells the frame keeps (``KevinFrame._kept_cells``, shared with
+  ``pivot_table`` and pivot ``height``/``width``), so a render after any
+  of those runs no Spark job; this module runs no crosstab query of its
+  own.
 
 Rendering collects to the driver — it is a presentation action, like the
 reference's ``show``; size is bounded by ``max_rows``.  A flat render reads
@@ -29,7 +31,7 @@ import math
 from pyspark.errors import SparkRuntimeException
 
 from kevinlang_spark.errors import KevinValueError
-from kevinlang_spark.frame import MANY_VALUES
+from kevinlang_spark.frame import MANY_VALUES, _many_values
 from kevinlang_spark.traits import DataInterpretation, FieldTraits
 
 
@@ -132,29 +134,27 @@ def _render_flat(kf, max_rows: int) -> str:
 def _render_pivot(kf, max_rows: int) -> str:
     """Crosstab: sorted-distinct headers per tree level, value matrix cells.
 
-    Reads the first ``max_rows`` col paths and rows of the wide table that
-    ``pivot_table`` computes (``KevinFrame._crosstab``): its col paths,
-    then one bounded collect of the row paths and their cells.
+    Draws the first ``max_rows`` row paths and col paths of the crosstab
+    and their cells (``KevinFrame._crosstab_grid``): from the frame's kept
+    crosstab cells, which the first of ``pivot_table``, a render,
+    ``height`` or ``width`` fetches, or from the wide table when the
+    crosstab holds more than ``_ROWS_BOUND`` cells.
     A cell with two values raises the reference's ``KevinValueError``.
     """
     rows_f = list(kf.pivot.row_fields)
     cols_f = list(kf.pivot.col_fields)
-    col_paths, wide = kf._crosstab(max_rows)
     try:
-        wide_rows = wide.limit(max_rows).collect()
+        row_paths, col_paths, grid = kf._crosstab_grid(max_rows)
     except SparkRuntimeException as e:
-        if e.getMessageParameters().get("errorMessage") != MANY_VALUES:
+        if not _many_values(e):
             raise
         raise KevinValueError(MANY_VALUES) from None
-    # row paths lead each wide row, its cells follow in col_paths order
-    n = len(rows_f)
-    row_paths = [tuple(r)[:n] for r in wide_rows] if rows_f else []
-    cells = {
-        tuple(r)[:n]: dict(zip(col_paths or [()], tuple(r)[n:])) for r in wide_rows
-    }
+    # an empty col tree, or a crosstab with no col path, draws one cell
+    ncells = max(len(col_paths), 1)
 
-    def hfmt(v, field):
-        return _fmt_header(v)
+    def vals(i: int) -> list[str]:
+        row = grid[i] if i < len(grid) else ()
+        return [_fmt_cell(row[j] if j < len(row) else None) for j in range(ncells)]
 
     lines: list[list[str]] = []
     row_hdr_w = len(rows_f) if rows_f else 1
@@ -165,31 +165,22 @@ def _render_pivot(kf, max_rows: int) -> str:
         prev_prefix = None
         for cp in col_paths:
             prefix = cp[: li + 1]
-            line.append(hfmt(cp[li], cf) if prefix != prev_prefix else "")
+            line.append(_fmt_header(cp[li]) if prefix != prev_prefix else "")
             prev_prefix = prefix
         lines.append(line)
     # row-tree field-name line
     if rows_f:
-        name_line = list(rows_f) + ([""] * len(col_paths) if col_paths else [""])
-        lines.append(name_line)
+        lines.append(rows_f + [""] * ncells)
     # body
-    if not row_paths:
-        body_cols = col_paths or [()]
-        lines.append(
-            [""] * row_hdr_w
-            + [_fmt_cell(cells.get((), {}).get(cp)) for cp in body_cols]
-        )
+    if not rows_f or not row_paths:
+        lines.append([""] * row_hdr_w + vals(0))
     else:
         prev: tuple | None = None
-        for rp in row_paths:
+        for i, rp in enumerate(row_paths):
             hdr = []
-            for i, f in enumerate(rows_f):
-                same = prev is not None and prev[: i + 1] == rp[: i + 1]
-                hdr.append("" if same else hfmt(rp[i], f))
+            for li in range(len(rows_f)):
+                same = prev is not None and prev[: li + 1] == rp[: li + 1]
+                hdr.append("" if same else _fmt_header(rp[li]))
             prev = rp
-            if col_paths:
-                vals = [_fmt_cell(cells.get(rp, {}).get(cp)) for cp in col_paths]
-            else:
-                vals = [_fmt_cell(cells.get(rp, {}).get(()))]
-            lines.append(hdr + vals)
+            lines.append(hdr + vals(i))
     return _show_lines(lines)

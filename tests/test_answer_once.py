@@ -1,7 +1,8 @@
 """A frame's answer is fetched once: the first action that reads all of a
 frame's rows keeps them on the frame, so ``height()``, ``render_frame`` and
-``collect()`` share one bounded collect, and ``last()``/``init()`` check
-emptiness inside the job that finds the last row.  Job counts are exact
+``collect()`` share one bounded collect (which counts the rows of a frame
+Catalyst cannot bound), and ``last()``/``init()`` check emptiness inside
+the job that finds the last row.  Job counts are exact
 (``test_csv_cache._jobs``)."""
 
 from __future__ import annotations
@@ -66,14 +67,66 @@ def test_collect_keeps_rows(spark, simple_frame):
     assert again == rows and again is not rows
 
 
-def test_unbounded_frame_runs_todays_jobs(spark, simple_frame):
-    """maxRows unknown: a count() plus a limit(max_rows) collect, as before."""
+def test_unbounded_frame_height_costs_no_job_beyond_render(spark, simple_frame):
+    """maxRows unknown: height() counts inside one observed bounded fetch
+    and keeps the rows, so height() plus the render cost no more jobs
+    than the render's own fetch."""
     assert _plan_max_rows(_city_sums(simple_frame)) is None
-    count_jobs, _ = _jobs(spark, lambda: _city_sums(simple_frame).df.count())
     head_jobs, _ = _jobs(spark, lambda: _city_sums(simple_frame).to_df().limit(100).collect())
     f = _city_sums(simple_frame)
-    jobs, _ = _jobs(spark, lambda: (f.height(), render_frame(f)))
-    assert jobs == count_jobs + head_jobs
+    jobs, (height, text) = _jobs(spark, lambda: (f.height(), render_frame(f)))
+    assert jobs == head_jobs
+    assert height == 3
+    assert text == render_frame(_city_sums(simple_frame))
+
+
+def _order_sums(spark, tmp_path, n: int):
+    """A grouped frame of ``n`` groups over a CSV (maxRows unknown)."""
+    body = "".join(f"{i},{i % 7}\n" for i in range(n))
+    path = _write(tmp_path / "orders.csv", "order_id,qty\n" + body)
+    return read_csv(spark, path).groupby(["order_id"]).aggregate("sum", "qty")
+
+
+def test_height_over_bound_counts_every_row(spark, tmp_path):
+    f = _order_sums(spark, tmp_path, 10_002)
+    assert _plan_max_rows(f) is None
+    assert f.height() == f.df.count() == 10_002
+    # a count above the bound keeps nothing: the render fetches its own head
+    text = render_frame(f)
+    want = [float(r["order_id"]) for r in f.to_df().limit(100).collect()]
+    assert [float(l.split()[1]) for l in text.splitlines()[1:]] == want
+    jobs, height = _jobs(spark, f.height)
+    assert jobs > 0
+    assert height == 10_002
+
+
+def test_height_of_empty_grouped_frame(spark, simple_frame):
+    f = _city_sums(simple_frame.filter("sale", lambda c: c > 10**9))
+    assert _plan_max_rows(f) is None
+    assert f.height() == f.df.count() == 0
+    jobs, text = _jobs(spark, lambda: render_frame(f))
+    assert jobs == 0
+    assert text == render_frame(_city_sums(simple_frame.filter("sale", lambda c: c > 10**9)))
+
+
+def test_height_after_drop(spark, simple_frame):
+    f = simple_frame.drop(5)
+    assert _plan_max_rows(f) is None
+    assert f.height() == f.to_df().count() == 8
+    jobs, rows = _jobs(spark, f.collect)
+    assert jobs == 0
+    assert rows == simple_frame.drop(5).to_df().collect()
+
+
+def test_unordered_frame_height_runs_count(spark, simple_frame):
+    def build():
+        return KevinFrame.from_df(simple_frame.to_df(), ordered=False).groupby(["city"]).aggregate("sum", "sale")
+
+    count_jobs, count = _jobs(spark, lambda: build().df.count())
+    f = build()
+    jobs, height = _jobs(spark, f.height)
+    assert jobs == count_jobs
+    assert height == count == 3
 
 
 def test_frame_above_bound_runs_todays_jobs(spark):
