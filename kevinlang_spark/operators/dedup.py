@@ -104,6 +104,14 @@ def shingle_sig_df(
     table; no shuffle, no Python worker, no second checkpoint.  Empty
     documents get a NULL signature, which banding filters out.
 
+    The window-hash and signature expressions are SQL text, one
+    ``F.expr`` call each.  Built Column by Column, every expression node
+    is its own Py4J round trip (about 10–40 commands a node): the
+    ``num_hashes`` permutation lambdas alone cost thousands of commands,
+    more build time than the Spark jobs of a 1,000-document run.  SQL
+    integer literals below 2^31 parse as INT, as ``F.lit`` makes them,
+    so the analyzed plan is the one the Column API would build.
+
     This is the only MinHash signature builder: every near-dup entry
     point that is not handed its inputs builds them here."""
     n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
@@ -118,16 +126,14 @@ def shingle_sig_df(
     # slice), and HOF-built arrays are ineligible for subexpression
     # elimination — inline, the tokenize+hash pass ran ~3× per row
     th = F.transform(tokenize(F.col("__t")), lambda t: F.xxhash64(t))
-    thc = F.col("__th")
-    k = F.size(thc)
-    starts = F.sequence(F.lit(1), F.greatest(k - (shingle_n - 1), F.lit(1)))
     # NULL text → size(NULL) = NULL, and a NULL condition falls through to
-    # otherwise() — which would fabricate [xxhash64(NULL)] and pair every
+    # ELSE — which would fabricate [xxhash64(NULL)] and pair every
     # NULL-text doc with every other; treat NULL like empty explicitly
-    shh = F.when(k.isNull() | (k <= 0), F.array().cast("array<bigint>")).otherwise(
-        F.array_distinct(
-            F.transform(starts, lambda i: F.xxhash64(F.slice(thc, i, shingle_n)))
-        )
+    shh = F.expr(
+        "CASE WHEN size(__th) IS NULL OR size(__th) <= 0"
+        " THEN CAST(array() AS ARRAY<BIGINT>) ELSE array_distinct(transform("
+        f"sequence(1, greatest(size(__th) - {shingle_n - 1}, 1)),"
+        f" i -> xxhash64(slice(__th, i, {shingle_n})))) END"
     )
     sh_df = (
         # repartition the RAW text first: a small corpus often arrives as
@@ -144,31 +150,19 @@ def shingle_sig_df(
         # write_minhash_index is the durable alternative
         .localCheckpoint(eager=True)
     )
-    params = _hash_params(num_hashes, seed)
     # signatures IN-ROW: each of the num_hashes permutations is an
-    # array_min over a transform of the stored hash set — identical affine
-    # math to the old explode→groupBy-min form (bigint overflow wraps the
-    # same way), but ZERO shuffle: the exploded shingle rows (the largest
-    # intermediate of the whole pipeline) never exist, and the signature
-    # computes inside the scan stage of the checkpointed hash table.
-    def _perm_min(a: int, b: int):
-        # closure factory: PySpark reads the lambda's arity, so defaults
-        # can't be used to bind (a, b)
-        return F.array_min(
-            F.transform(
-                F.col("shh"),
-                lambda h: F.pmod(
-                    F.lit(a) * F.pmod(h, F.lit(MERSENNE)) + F.lit(b),
-                    F.lit(MERSENNE),
-                ),
-            )
-        )
-
-    mins = [_perm_min(a, b) for a, b in params]
-    # empty hash set → NULL sig, which band_keys filters out
+    # array_min over a transform of the stored hash set, computed inside
+    # the scan stage of the checkpointed hash table — no shuffle, and the
+    # exploded shingle rows (the largest intermediate a groupBy-min would
+    # need) never exist.  Empty hash set → NULL sig, which band_keys
+    # filters out.
+    mins = ", ".join(
+        f"array_min(transform(shh, h -> pmod({a} * pmod(h, {MERSENNE}) + {b},"
+        f" {MERSENNE})))"
+        for a, b in _hash_params(num_hashes, seed)
+    )
     sig_df = sh_df.select(
-        "id",
-        F.when(F.size("shh") > 0, F.array(*mins)).alias("sig"),
+        "id", F.expr(f"CASE WHEN size(shh) > 0 THEN array({mins}) END").alias("sig")
     )
     return sh_df, sig_df
 
@@ -191,31 +185,17 @@ def band_keys(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:
     """(id, band, key) LSH band keys of a (id, sig) signature frame: each
     band's ``rows`` signature values hash to one 64-bit key.  Scan-stage
     explode — the banding used by both the self-join (batch dedup) and
-    the bipartite probe-vs-index flows."""
+    the bipartite probe-vs-index flows.  All bands are one SQL
+    expression (see ``shingle_sig_df``), so building them costs the same
+    few JVM commands at any band count."""
+    keys = ", ".join(
+        f"struct({b} AS band, xxhash64(concat_ws(',', transform("
+        f"slice(sig, {b * rows + 1}, {rows}), v -> CAST(v AS STRING)))) AS key)"
+        for b in range(bands)
+    )
     return (
         sig_df.where(F.col("sig").isNotNull())
-        .select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                F.concat_ws(
-                                    ",",
-                                    F.transform(
-                                        F.slice("sig", b * rows + 1, rows),
-                                        lambda v: v.cast("string"),
-                                    ),
-                                )
-                            ).alias("key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        )
+        .select("id", F.expr(f"explode(array({keys}))").alias("bk"))
         .select("id", "bk.band", "bk.key")
     )
 

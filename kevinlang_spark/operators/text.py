@@ -110,7 +110,11 @@ def quality_score(
     HALF_UP) and other engines (binary rounding) disagree — cross-engine
     comparisons should compare the raw binary value instead.
     """
-    f = quality_features(text, toks)
+    return _score(quality_features(text, toks), rounded)
+
+
+def _score(f: dict[str, Column], rounded: bool = True) -> Column:
+    """``quality_score`` over already-built ``quality_features``."""
     len_ok = F.least(f["n_tokens"].cast("double") / F.lit(20.0), F.lit(1.0))
     # coalesce BEFORE least: F.least skips NULL arguments, so
     # least(NULL, 1.0) = 1.0 would hand token-free garbage a 0.3 floor
@@ -561,17 +565,23 @@ def inverted_index(
 
 
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """documents → + language/quality/token/fingerprint columns; one narrow
-    projection, no shuffle."""
+    """documents → + language/quality/token/fingerprint columns; narrow
+    projections, no shuffle."""
     t = F.col(text_col)
-    feats = quality_features(t)
-    return df.select(
+    # tokenize ONCE into a staged column: lang_id and the quality features
+    # would otherwise each re-split the text (lambda-bearing expressions
+    # defeat Catalyst CSE, and CollapseProject keeps a multiply-referenced
+    # non-cheap alias materialized in its own projection)
+    staged = df.select("*", tokenize(t).alias("__toks"))
+    toks = F.col("__toks")
+    feats = quality_features(t, toks)
+    return staged.select(
         "*",
-        lang_id(t).alias("lang_pred"),
+        lang_id(t, toks).alias("lang_pred"),
         *[v.alias(k) for k, v in feats.items() if k != "n_chars"],
-        quality_score(t).alias("quality"),
+        _score(feats).alias("quality"),
         fingerprint(t).alias("fp"),
-    )
+    ).drop("__toks")
 
 
 def bigram_lm_score(

@@ -31,7 +31,7 @@ import math
 from pyspark.errors import SparkRuntimeException
 
 from kevinlang_spark.errors import KevinValueError
-from kevinlang_spark.frame import MANY_VALUES, _many_values
+from kevinlang_spark.frame import MANY_VALUES, _many_values, _order_key
 from kevinlang_spark.traits import DataInterpretation, FieldTraits
 
 
@@ -164,7 +164,8 @@ def _render_pivot(kf, max_rows: int) -> str:
         line = [cf] + [""] * (row_hdr_w - 1)
         prev_prefix = None
         for cp in col_paths:
-            prefix = cp[: li + 1]
+            # NaN-equal compare: Spark groups NaN keys under one parent
+            prefix = _order_key(cp[: li + 1])
             line.append(_fmt_header(cp[li]) if prefix != prev_prefix else "")
             prev_prefix = prefix
         lines.append(line)
@@ -179,7 +180,9 @@ def _render_pivot(kf, max_rows: int) -> str:
         for i, rp in enumerate(row_paths):
             hdr = []
             for li in range(len(rows_f)):
-                same = prev is not None and prev[: li + 1] == rp[: li + 1]
+                same = prev is not None and _order_key(prev[: li + 1]) == _order_key(
+                    rp[: li + 1]
+                )
                 hdr.append("" if same else _fmt_header(rp[li]))
             prev = rp
             lines.append(hdr + vals(i))

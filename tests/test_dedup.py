@@ -96,6 +96,111 @@ def test_jaccard_verify_default_shingles_match_hashed(docs):
         assert default == given, threshold
 
 
+@pytest.fixture(scope="module")
+def sig_docs(spark, docs):
+    """40 corpus docs plus a NULL, an empty, a punctuation-only and a
+    1-token text."""
+    edge = spark.createDataFrame(
+        [(900001, None), (900002, ""), (900003, "!!! ..."), (900004, "word")],
+        "doc_id long, text string",
+    )
+    return docs.select("doc_id", "text").limit(40).unionByName(edge)
+
+
+@pytest.mark.parametrize("num_hashes", [32, 64, 128])
+def test_signature_matches_python_oracle(sig_docs, num_hashes):
+    """Each signature value is min over the row's shingle hashes of
+    ``(a·(h mod M) + b) mod M`` for the seeded ``(a, b)`` family,
+    recomputed here in Python; an empty hash set signs NULL."""
+    sh, sig = dedup.shingle_sig_df(sig_docs, num_hashes=num_hashes)
+    shh = {r["id"]: r["shh"] for r in sh.collect()}
+    got = {r["id"]: r["sig"] for r in sig.collect()}
+    m = dedup.MERSENNE
+    params = dedup._hash_params(num_hashes, 42)
+    assert got.keys() == shh.keys()
+    for i, hs in shh.items():
+        want = [min((a * (h % m) + b) % m for h in hs) for a, b in params] if hs else None
+        assert got[i] == want, i
+    assert shh[900001] == shh[900002] == shh[900003] == []
+    assert got[900001] is None and got[900002] is None
+    assert len(shh[900004]) == 1 and len(got[900004]) == num_hashes
+
+
+def _column_band_keys(sig_df, bands: int, rows: int):
+    """The Column-API banding formula ``band_keys`` replaced."""
+    return (
+        sig_df.where(F.col("sig").isNotNull())
+        .select(
+            "id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.xxhash64(
+                                F.concat_ws(
+                                    ",",
+                                    F.transform(
+                                        F.slice("sig", b * rows + 1, rows),
+                                        lambda v: v.cast("string"),
+                                    ),
+                                )
+                            ).alias("key"),
+                        )
+                        for b in range(bands)
+                    ]
+                )
+            ).alias("bk"),
+        )
+        .select("id", "bk.band", "bk.key")
+    )
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(32, 16), (64, 16), (128, 32)])
+def test_band_keys_match_column_formula(sig_docs, num_hashes, bands):
+    """SQL-text band keys equal the Column-API formula, also on a frame
+    whose extra columns ``h`` and ``v`` share the lambda variables'
+    names: the lambda variable shadows the column."""
+    _, sig = dedup.shingle_sig_df(sig_docs, num_hashes=num_hashes)
+    sig = sig.select("*", F.lit(7).cast("bigint").alias("h"), F.lit("x").alias("v"))
+    rows = num_hashes // bands
+    got = _pairs(dedup.band_keys(sig, bands, rows))
+    assert len(got) == 41 * bands  # NULL, empty and "!!! ..." have no keys
+    assert got == _pairs(_column_band_keys(sig, bands, rows))
+
+
+def _jvm_commands(monkeypatch, fn) -> int:
+    """Py4J commands Python sends to the JVM while ``fn`` runs."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return sent[0]
+
+
+def test_minhash_plan_build_cost(monkeypatch, sig_docs):
+    """Building the plan costs one JVM expression per builder, not one
+    Py4J round trip per Column node: ``band_keys`` sends as many
+    commands at 32 bands as at 16, and building ``minhash_dedup_pairs``
+    at its defaults (its checkpoint job included) stays under 2,000
+    (the Column-API builders sent about 6,300)."""
+    _, sig = dedup.shingle_sig_df(sig_docs, num_hashes=128)
+    dedup.band_keys(sig, 16, 8)  # warm Py4J's member lookups
+    at16 = _jvm_commands(monkeypatch, lambda: dedup.band_keys(sig, 16, 8))
+    at32 = _jvm_commands(monkeypatch, lambda: dedup.band_keys(sig, 32, 4))
+    assert 0 < at16 == at32
+    built = _jvm_commands(monkeypatch, lambda: dedup.minhash_dedup_pairs(sig_docs))
+    assert 0 < built < 2_000
+
+
 def test_bad_band_split_raises_before_any_spark_job(spark, docs):
     """A ``num_hashes``/``bands`` split that cannot band raises before the
     signature checkpoint or the index read starts a job."""

@@ -77,6 +77,32 @@ def test_crosstab_render(simple_frame):
     assert lines[3].split() == ["M", "13448.0", "11227.0"]
 
 
+def test_crosstab_nan_keys_span_one_parent(spark):
+    """NaN keys share one parent in Spark's grouping, so the header tree
+    draws a NaN parent once over its children, on rows and on cols."""
+    from kevinlang_spark import KevinFrame
+
+    nan = float("nan")
+    rows = spark.createDataFrame(
+        [(nan, 1, "a", 10.0), (nan, 2, "a", 20.0), (1.0, 1, "b", 5.0)],
+        "x double, y int, c string, v double",
+    )
+    lines = KevinFrame.from_df(rows).cast(["x", "y"], ["c"], "sum", "v").render().splitlines()
+    assert [l.split() for l in lines[2:5]] == [
+        ["1", "1", "empty", "5.0"],
+        ["nan", "1", "10.0", "empty"],
+        ["2", "20.0", "empty"],
+    ]
+    cols = spark.createDataFrame(
+        [("r", nan, 1, 10.0), ("r", nan, 2, 20.0), ("r", 1.0, 1, 5.0)],
+        "r string, p double, q int, v double",
+    )
+    lines = KevinFrame.from_df(cols).cast(["r"], ["p", "q"], "sum", "v").render().splitlines()
+    assert lines[0].split() == ["p", "1", "nan"]
+    assert lines[1].split() == ["q", "1", "1", "2"]
+    assert lines[3].split() == ["r", "5.0", "10.0", "20.0"]
+
+
 def test_crosstab_two_row_fields(simple_frame):
     kf = simple_frame.cast(["gender", "city"], ["product"], "sum", "sale")
     out = kf.render()
