@@ -44,7 +44,7 @@ from dataclasses import dataclass
 from typing import Callable, Iterable, Sequence
 
 from pyspark.errors import SparkRuntimeException
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -150,11 +150,25 @@ class KevinFrame:
     rows, or a render of at most ``max_rows``.  Later actions on the same
     frame read them and run no Spark job, and a source rewritten in
     between is not read again — as the reference's ``height`` and
-    ``show`` read one in-memory frame (DataFrame.hs:65-172).  A frame in
-    pivot form keeps its crosstab's cells the same way: the first of
-    ``pivot_table``, a render, ``height`` or ``width`` fetches them once
-    (at most ``_ROWS_BOUND`` cells) and the others read them.  A derived
-    frame starts without rows or cells."""
+    ``show`` read one in-memory frame (DataFrame.hs:65-172).
+
+    A flat frame whose plan bounds its rows (Catalyst's ``maxRows``) at
+    ``_ROWS_BOUND`` or fewer is *bounded*, and the positional ops —
+    ``head``, ``tail``, ``init``, ``last`` and ``join`` — fetch it once
+    with one bounded collect (``_bounded_rows``) instead of running their
+    own check job; on any other frame they keep their one job.  A
+    positional derivation (``take``, ``drop`` and the ops built on them,
+    ``last``, ``join``) reads its parent's rows when the parent holds
+    them: the result keeps its slice, so its ``height`` and render run
+    no job and show the rows the parent fetched — as the reference's
+    slicing and zip join read one index list (Combinator.hs:293-360).
+    The cost: ``head``/``last`` on a bounded frame of n rows ship those
+    n rows to the driver, where a lone check shipped at most one.
+
+    A frame in pivot form keeps its crosstab's cells the same way: the
+    first of ``pivot_table``, a render, ``height`` or ``width`` fetches
+    them once (at most ``_ROWS_BOUND`` cells) and the others read them.
+    Any other derived frame starts without rows or cells."""
 
     def __init__(
         self,
@@ -700,57 +714,92 @@ class KevinFrame:
         """
         self._require_ordered("take")
         if n <= 0:
-            return self._derive(self._df.where(F.lit(False)), pivot=None)
-        out = self._df.orderBy(*self._order_cols()).limit(n)
-        return self._derive(out, pivot=None)
+            return self._sliced(self._df.where(F.lit(False)), slice(0))
+        return self._sliced(self._df.orderBy(*self._order_cols()).limit(n), slice(n))
 
     def drop(self, n: int) -> "KevinFrame":
         """All but the first n rows (reference Combinator.hs:297-299);
         ``orderBy(spec).offset(n)``."""
         self._require_ordered("drop")
         if n <= 0:
-            return self._derive(self._df, pivot=None)
-        out = self._df.orderBy(*self._order_cols()).offset(n)
-        return self._derive(out, pivot=None)
+            return self._sliced(self._df, slice(None))
+        return self._sliced(self._df.orderBy(*self._order_cols()).offset(n), slice(n, None))
+
+    def _sliced(self, df: DataFrame, part: slice) -> "KevinFrame":
+        """A positional derivation over ``df``, the lazy plan of ``part``
+        of this frame's rows; it keeps that part of the kept rows."""
+        out = self._derive(df, pivot=None)
+        if self._rows is not None:
+            out._rows = self._rows[part]
+        return out
+
+    def _row_bound(self) -> int | None:
+        """Catalyst's bound on a flat frame's rows (``maxRows``) when it
+        is at most ``_ROWS_BOUND``: the frame is *bounded*.  None for any
+        other frame."""
+        if self.pivot is None:
+            m = self._df._jdf.queryExecution().optimizedPlan().maxRows()
+            if m.isDefined() and m.get() <= _ROWS_BOUND:
+                return m.get()
+        return None
+
+    def _bounded_rows(self) -> list | None:
+        """The frame's rows: the kept ones, else those of a bounded frame,
+        fetched with one bounded collect and kept.  None for any other
+        frame, which no job has fetched."""
+        if self._rows is None and (m := self._row_bound()) is not None:
+            # limit keeps an ordered fetch a TakeOrderedAndProject; a bare
+            # ordered collect plans a range-partitioned sort
+            self._rows = self.to_df().limit(m).collect()
+        return self._rows
 
     def _row_count(self) -> int:
         """Underlying row count — slicing operates on ROWS even in pivot
         form (the reference's slicing works on Indices regardless of
         TitleTrees; only height()/width() switch to leaf counts)."""
-        return len(self._rows) if self._rows is not None else self._df.count()
+        rows = self._bounded_rows()
+        return len(rows) if rows is not None else self._df.count()
 
     def _check_nonempty(self, op: str) -> None:
-        # the fetched rows answer without a job; otherwise isEmpty reads at
-        # most one partition — head() on a huge frame must not pay a full
-        # count scan
-        empty = not self._rows if self._rows is not None else self._df.isEmpty()
+        # a bounded frame answers from its one fetch; otherwise isEmpty
+        # reads at most one partition — head() on a huge frame must not
+        # pay a full count scan
+        rows = self._bounded_rows()
+        empty = not rows if rows is not None else self._df.isEmpty()
         if empty:
             raise KevinValueError(f"{op}: empty data frame")
 
     def head(self) -> "KevinFrame":
         """First row only; errors on a row-empty frame (reference uses
-        Prelude.head — see test/Spec.lhs:33)."""
+        Prelude.head — see test/Spec.lhs:33).  A bounded frame is fetched
+        once, and the result keeps the first of its rows."""
         self._require_ordered("head")
         self._check_nonempty("head")
         return self.take(1)
 
     def tail(self) -> "KevinFrame":
-        """All but the first row; errors on empty (Combinator.hs:313-315)."""
+        """All but the first row; errors on empty (Combinator.hs:313-315).
+        A bounded frame is fetched once and the result keeps all but the
+        first of its rows, so its ``height`` and render run no job; any
+        other frame checks emptiness with ``isEmpty``."""
         self._require_ordered("tail")
         self._check_nonempty("tail")
         return self.drop(1)
+
+    def _reverse_order_cols(self) -> list[Column]:
+        """The exact reverse of the row order (``_order_cols``)."""
+        return self._derive(
+            self._df,
+            order_spec=tuple((n, not asc) for n, asc in self.order_spec),
+            idx_asc=not self.idx_asc,
+        )._order_cols()
 
     def _last_idx(self, op: str):
         """``__idx`` of the view's last row, found with a reverse-order
         top-1 (TakeOrderedAndProject: per-partition top-1, tiny merge) —
         no full count, no single-partition shuffle.  The same job checks
         emptiness: no row raises ``op``'s empty-frame error."""
-        rev = self._derive(
-            self._df,
-            order_spec=tuple((n, not asc) for n, asc in self.order_spec),
-            idx_asc=not self.idx_asc,
-        )
-        row = self._df.orderBy(*rev._order_cols()).select(IDX).first()
+        row = self._df.orderBy(*self._reverse_order_cols()).select(IDX).first()
         if row is None:
             raise KevinValueError(f"{op}: empty data frame")
         return row[0]
@@ -758,21 +807,35 @@ class KevinFrame:
     def init(self) -> "KevinFrame":
         """All but the last row; errors on empty (Combinator.hs:305-307).
 
-        Planned as a distributed filter on the last row's unique ``__idx``
-        (one cheap reverse top-1 job) — not count-then-limit, which paid a
-        full count and funneled n-1 rows through a global limit."""
+        A bounded frame is fetched once, and the result is ``take(n - 1)``
+        keeping all but the last of its rows.  Any other frame is planned
+        as a distributed filter on the last row's ``__idx`` (one cheap
+        reverse top-1 job) — not count-then-limit, which paid a full count
+        and funneled n-1 rows through a global limit — and the result
+        keeps all but the last of the rows the frame holds, if any."""
         self._require_ordered("init")
-        return self._derive(
-            self._df.where(F.col(IDX) != F.lit(self._last_idx("init"))), pivot=None
-        )
+        if self._row_bound() is None:
+            return self._sliced(
+                self._df.where(F.col(IDX) != F.lit(self._last_idx("init"))), slice(-1)
+            )
+        self._check_nonempty("init")
+        return self.take(len(self._rows) - 1)
 
     def last(self) -> "KevinFrame":
         """Last row only; errors on empty (Combinator.hs:309-311).
-        Same single-job shape as ``init`` — an equality filter on the last
-        row's ``__idx``."""
+
+        Planned as a reverse-order top-1: the order (spec, then ``__idx``)
+        is total, so that is the last row even where ``__idx`` repeats
+        (``melt``).  A bounded frame is fetched once and the result keeps
+        the last of its rows; any other frame checks emptiness with one
+        reverse top-1 job (``_last_idx``)."""
         self._require_ordered("last")
-        return self._derive(
-            self._df.where(F.col(IDX) == F.lit(self._last_idx("last"))), pivot=None
+        if self._bounded_rows() is None:
+            self._last_idx("last")
+        else:
+            self._check_nonempty("last")
+        return self._sliced(
+            self._df.orderBy(*self._reverse_order_cols()).limit(1), slice(-1, None)
         )
 
     # ------------------------------------------------------------------ #
@@ -783,33 +846,27 @@ class KevinFrame:
         """Visible row count; on pivot frames, the row-tree leaf count
         (1 if the row tree is empty) — reference Combinator.hs:278-291.
 
-        A flat frame whose plan bounds its rows (Catalyst's ``maxRows``)
-        at ``_ROWS_BOUND`` or fewer fetches them with one bounded collect
-        and keeps them, which fixes the frame's rows.  Any other ordered
-        frame fetches its first ``_ROWS_BOUND + 1`` rows in one job whose
-        plan also counts every row (``DataFrame.observe`` under the top-k
-        sort, which reads them all): a count within the bound keeps the
-        rows, a larger one is returned and nothing is kept.  An unordered
-        frame runs a ``count()``.  A pivot frame counts the row paths of
-        its kept crosstab cells (see ``_kept_cells``)."""
+        A bounded frame (see the class docstring) fetches its rows with
+        one bounded collect and keeps them, which fixes the frame's rows
+        (``_bounded_rows``).  Any other ordered frame fetches its first
+        ``_ROWS_BOUND + 1`` rows in one job whose plan also counts every
+        row (``DataFrame.observe`` under the top-k sort, which reads them
+        all): a count within the bound keeps the rows, a larger one is
+        returned and nothing is kept.  An unordered frame runs a
+        ``count()``.  A pivot frame counts the row paths of its kept
+        crosstab cells (see ``_kept_cells``)."""
         if self.pivot is not None:
             return self._leaf_count(self.pivot.row_fields, "rows")
-        if self._rows is None:
-            m = self._df._jdf.queryExecution().optimizedPlan().maxRows()
-            # limit keeps an ordered fetch a TakeOrderedAndProject; a bare
-            # ordered collect plans a range-partitioned sort
-            if m.isDefined() and m.get() <= _ROWS_BOUND:
-                self._rows = self.to_df().limit(m.get()).collect()
-            elif not self.ordered:
+        if self._bounded_rows() is None:
+            if not self.ordered:
                 return self._df.count()
-            else:
-                seen = Observation()
-                counted = self._derive(self._df.observe(seen, F.count(F.lit(1)).alias("n")))
-                rows = counted.to_df().limit(_ROWS_BOUND + 1).collect()
-                n = seen.get["n"]
-                if n > _ROWS_BOUND:
-                    return n
-                self._rows = rows
+            seen = Observation()
+            counted = self._derive(self._df.observe(seen, F.count(F.lit(1)).alias("n")))
+            rows = counted.to_df().limit(_ROWS_BOUND + 1).collect()
+            n = seen.get["n"]
+            if n > _ROWS_BOUND:
+                return n
+            self._rows = rows
         return len(self._rows)
 
     def width(self) -> int:
@@ -890,6 +947,11 @@ class KevinFrame:
         position.  Duplicate column names are disambiguated with a ``_r``
         suffix (the reference allows duplicates outright; Spark would make
         them unaddressable).
+
+        The equal-height check fetches each bounded side once (see the
+        class docstring) and counts any other side.  When both sides hold
+        their rows, the result keeps the zipped rows, named as its
+        columns, so its ``height`` and render run no job.
         """
         self._require_ordered("join")
         other._require_ordered("join")
@@ -903,12 +965,17 @@ class KevinFrame:
             r = r.withColumnRenamed(old, new)
         out = l.join(r, l[IDX] == r["__rn"]).drop("__rn")
         traits = dict(self.traits)
+        names = self.columns + [rename.get(c, c) for c in other.columns]
         for c in other.columns:
             traits[rename.get(c, c)] = other.traits.get(c)
-        out = out.select(*[_q(c) for c in self.columns], *[_q(rename.get(c, c)) for c in other.columns], IDX)
-        return self._derive(
-            out, traits=traits, group_cols=(), pivot=None, order_spec=(), idx_asc=True
+        out = self._derive(
+            out.select(*[_q(c) for c in names], IDX),
+            traits=traits, group_cols=(), pivot=None, order_spec=(), idx_asc=True,
         )
+        if self._rows is not None and other._rows is not None:
+            row = Row(*names)
+            out._rows = [row(*a, *b) for a, b in zip(self._rows, other._rows)]
+        return out
 
     # ------------------------------------------------------------------ #
     # extension-operator surface: the pipeline ops as frame methods, so a

@@ -1,13 +1,16 @@
 """A frame's answer is fetched once: the first action that reads all of a
 frame's rows keeps them on the frame, so ``height()``, ``render_frame`` and
 ``collect()`` share one bounded collect (which counts the rows of a frame
-Catalyst cannot bound), and ``last()``/``init()`` check emptiness inside
-the job that finds the last row.  Job counts are exact
+Catalyst cannot bound).  A positional op on a bounded frame runs that one
+fetch itself, and its result keeps its slice of the rows; on any other
+frame it runs its own check job.  Job counts are exact
 (``test_csv_cache._jobs``)."""
 
 from __future__ import annotations
 
 import pytest
+
+from pyspark.sql import functions as F
 
 from kevinlang_spark import KevinFrame, SortOrder
 from kevinlang_spark.errors import KevinValueError
@@ -26,6 +29,11 @@ def _top_cities(frame, k: int = 3):
 def _city_sums(frame):
     """A grouped aggregate: Catalyst cannot bound its row count."""
     return frame.groupby(["city"]).aggregate("sum", "sale")
+
+
+def _unkept(kf):
+    """The same frame with no rows kept: its answers run the lazy plan."""
+    return kf._derive(kf.df)
 
 
 def _plan_max_rows(kf):
@@ -147,12 +155,16 @@ def test_frame_above_bound_runs_todays_jobs(spark):
     assert height == 10001
 
 
-def test_derived_frame_runs_its_own_jobs(spark, simple_frame):
-    f = simple_frame.take(10)
+def test_derived_frame_runs_its_own_jobs(spark, simple_csv):
+    """Only a positional derivation reads its parent's rows: a select of
+    a frame that holds its rows runs the jobs of a fresh frame's."""
+    want, want_height = _jobs(spark, read_csv(spark, simple_csv).take(10).select(["city"]).height)
+    f = read_csv(spark, simple_csv).take(10)
     f.height()
-    jobs, height = _jobs(spark, lambda: f.take(3).height())
-    assert jobs > 0
-    assert height == 3
+    g = f.select(["city"])
+    jobs, height = _jobs(spark, g.height)
+    assert jobs == want > 0
+    assert height == want_height == 10
 
 
 def test_stored_rows_answer_checks_and_zip_height(spark, simple_frame):
@@ -168,11 +180,20 @@ def test_stored_rows_answer_checks_and_zip_height(spark, simple_frame):
 
 
 @pytest.mark.parametrize("op", ["last", "init"])
-def test_last_and_init_run_one_eager_job(spark, simple_frame, op):
-    f = simple_frame.take(13)
+def test_last_and_init_run_one_eager_job(spark, simple_csv, op):
+    """On a fresh bounded frame the one eager job is its bounded fetch,
+    and the result keeps its slice: height() and the render run none."""
+    fetch, _ = _jobs(spark, read_csv(spark, simple_csv).take(13).to_df().limit(13).collect)
+    f = read_csv(spark, simple_csv).take(13)
     jobs, out = _jobs(spark, lambda: getattr(f, op)())
-    assert jobs == 1
-    assert out.height() == (1 if op == "last" else 12)
+    assert jobs == fetch == 1
+    again, (height, text) = _jobs(spark, lambda: (out.height(), render_frame(out)))
+    assert again == 0
+    rows = read_csv(spark, simple_csv).take(13).to_df().collect()
+    want = rows[-1:] if op == "last" else rows[:-1]
+    assert out.collect() == want
+    assert height == len(want)
+    assert text == render_frame(_unkept(out))
 
 
 @pytest.mark.parametrize("op", ["head", "tail", "init", "last"])
@@ -193,6 +214,169 @@ def test_render_shows_the_rows_height_counted(spark, tmp_path):
     text = render_frame(f)
     assert [l.split()[1] for l in text.splitlines()[1:]] == ["s0", "s1", "s2", "s3"]
     assert f.height() == 4
+
+
+# --- a positional op on a bounded frame fetches it once, and its result
+# keeps the slice ---
+
+
+def _bounded(spark, simple_csv, skip: int = 0):
+    """A fresh bounded frame: 10 rows of the simple CSV from row ``skip``."""
+    return read_csv(spark, simple_csv).drop(skip).take(10)
+
+
+_POSITIONAL = {
+    "head": lambda f, g: f.head(),
+    "tail": lambda f, g: f.tail(),
+    "init": lambda f, g: f.init(),
+    "last": lambda f, g: f.last(),
+    "take": lambda f, g: f.take(4),
+    "drop": lambda f, g: f.drop(4),
+    "join": lambda f, g: f.join(g),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_POSITIONAL))
+def test_positional_op_reads_one_fetch(spark, simple_csv, op):
+    fetch, _ = _jobs(spark, _bounded(spark, simple_csv).to_df().limit(10).collect)
+    fetch_g, _ = _jobs(spark, _bounded(spark, simple_csv, 3).to_df().limit(10).collect)
+    f, g = _bounded(spark, simple_csv), _bounded(spark, simple_csv, 3)
+
+    def run():
+        if op in ("take", "drop"):
+            f.height()  # the lazy slices read the rows height() fetched
+        return _POSITIONAL[op](f, g)
+
+    jobs, out = _jobs(spark, run)
+    assert jobs == fetch + (fetch_g if op == "join" else 0)
+    again, (height, text, rows) = _jobs(
+        spark, lambda: (out.height(), render_frame(out), out.collect())
+    )
+    assert again == 0
+    fresh = _unkept(_POSITIONAL[op](_bounded(spark, simple_csv), _bounded(spark, simple_csv, 3)))
+    want = fresh.to_df().collect()
+    assert rows == want
+    assert [list(r.__fields__) for r in rows] == [list(r.__fields__) for r in want]
+    assert height == len(want) == {"head": 1, "last": 1, "take": 4, "drop": 6}.get(op, 9 + (op == "join"))
+    assert text == render_frame(fresh)
+
+
+def test_init_of_unbounded_frame_holding_rows(spark, simple_csv):
+    """A frame Catalyst cannot bound keeps init()'s distributed filter
+    plan and its one reverse top-1 job even when it holds its rows; the
+    result keeps all but the last of them."""
+    f = read_csv(spark, simple_csv)
+    assert _plan_max_rows(f) is None
+    f.height()
+    jobs, out = _jobs(spark, f.init)
+    assert jobs == 1
+    plan = out.df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Filter" in plan and "GlobalLimit" not in plan
+    again, rows = _jobs(spark, out.collect)
+    assert again == 0
+    assert rows == read_csv(spark, simple_csv).to_df().collect()[:-1]
+
+
+def test_tail_keeps_the_rows_it_fetched(spark, tmp_path):
+    path = _write(tmp_path / "o.csv", "store,qty\n" + "".join(f"s{i},{i}\n" for i in range(6)))
+    f = read_csv(spark, path).take(4).tail()
+    _write(tmp_path / "o.csv", "store,qty\nzz,100\n", age_s=None)
+    text = render_frame(f)
+    assert [l.split()[1] for l in text.splitlines()[1:]] == ["s1", "s2", "s3"]
+    assert f.height() == 3
+
+
+def _above_bound(spark):
+    return KevinFrame.from_df(spark.range(20000)).take(10001)
+
+
+@pytest.mark.parametrize("op", ["head", "tail", "init", "last", "join"])
+def test_positional_op_above_bound_runs_todays_job(spark, op):
+    """A frame Catalyst bounds above ``_ROWS_BOUND`` is not fetched: the
+    op runs ``isEmpty``, the reverse top-1 or a ``count()`` per side."""
+    df = _above_bound(spark).df
+    todays = {
+        "head": df.isEmpty,
+        "tail": df.isEmpty,
+        "init": df.orderBy(df["__idx"].desc()).select("__idx").first,
+        "last": df.orderBy(df["__idx"].desc()).select("__idx").first,
+        "join": lambda: (df.count(), df.count()),
+    }
+    want, _ = _jobs(spark, todays[op])
+    f = _above_bound(spark)
+    jobs, out = _jobs(spark, lambda: _POSITIONAL[op](f, _above_bound(spark)))
+    assert jobs == want > 0
+    assert out.height() == {"head": 1, "last": 1}.get(op, 10000 + (op == "join"))
+    assert out.collect()[-1]["id"] == (0 if op == "head" else 10000 - (op == "init"))
+
+
+def test_zip_join_keeps_r_names_and_nulls(spark):
+    def build():
+        l = spark.createDataFrame([(1, "a"), (None, "b"), (3, None)], "k int, v string")
+        r = spark.createDataFrame([(None, 1.5), (20, None), (30, 2.5)], "k int, w double")
+        return KevinFrame.from_df(l).take(3).join(KevinFrame.from_df(r).take(3))
+
+    z = build()
+    jobs, (rows, text) = _jobs(spark, lambda: (z.collect(), render_frame(z)))
+    assert jobs == 0
+    assert z.columns == list(rows[0].__fields__) == ["k", "v", "k_r", "w"]
+    assert [r.asDict() for r in rows] == [
+        {"k": 1, "v": "a", "k_r": None, "w": 1.5},
+        {"k": None, "v": "b", "k_r": 20, "w": None},
+        {"k": 3, "v": None, "k_r": 30, "w": 2.5},
+    ]
+    fresh = _unkept(build())
+    assert [r.asDict() for r in fresh.to_df().collect()] == [r.asDict() for r in rows]
+    assert text == render_frame(fresh)
+
+
+@pytest.mark.parametrize("op", ["head", "tail", "init", "last", "join"])
+def test_empty_frame_above_bound_errors_unchanged(spark, op):
+    empty = KevinFrame.from_df(spark.range(20000)).filter(F.col("id") < 0)
+    other = KevinFrame.from_df(spark.range(3)).take(3)
+    msg = "Can't join inconsistent data frames" if op == "join" else f"{op}: empty data frame"
+    with pytest.raises(KevinValueError, match=f"^{msg}$"):
+        _POSITIONAL[op](empty, other)
+
+
+def test_last_of_melt_is_one_row(spark, simple_frame):
+    """melt repeats ``__idx`` once per variable: last() is the one last
+    row of the var-major order, on a bounded frame and on any other."""
+    long = simple_frame.melt(["city"], ["sale", "cost"])
+    want = long.to_df().collect()[-1:]
+    assert _plan_max_rows(long) is None
+    assert long.last().collect() == want
+    assert simple_frame.take(13).melt(["city"], ["sale", "cost"]).last().collect() == want
+
+
+#: (plan, height + render) jobs of three analyst question shapes on the
+#: simple CSV; the plan's one bounded fetch answers height() and the render
+_SHAPES = {
+    "melt_tail": (
+        lambda f: f.drop(2).take(8).select(["year", "sale", "cost"]).melt(["year"], ["sale", "cost"]).tail(),
+        6, 0,
+    ),
+    "take_last": (lambda f: f.sort("sale", SortOrder.DESCENDING).take(5).last(), 1, 0),
+    "zip": (
+        lambda f: f.filter("year", lambda c: c == 2001).take(4).select(["city", "sale"]).join(
+            f.filter("year", lambda c: c > 2001).take(4).select(["city", "cost"])
+        ),
+        2, 0,
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_question_shape_job_counts(spark, simple_csv, shape):
+    build, plan_jobs, answer_jobs = _SHAPES[shape]
+    f = read_csv(spark, simple_csv)
+    jobs, out = _jobs(spark, lambda: build(f))
+    assert jobs == plan_jobs
+    jobs, (height, text) = _jobs(spark, lambda: (out.height(), render_frame(out)))
+    assert jobs == answer_jobs
+    fresh = _unkept(build(read_csv(spark, simple_csv)))
+    assert height == fresh.to_df().count()
+    assert text == render_frame(fresh)
 
 
 # --- pivot_table column order is the render's header order ---
