@@ -8,12 +8,13 @@ carries the state Spark does not:
 
 - **order**: a hidden ``__idx`` LongType column gives rows stable identity
   (reference Indices, DataFrame.hs:66-67), and a LAZY ``order spec`` — a
-  list of (column, ascending) pairs ending in ``__idx`` — defines the
-  current row order.  ``sort`` only rewrites the spec (no job, no shuffle);
-  ``take`` compiles to ``orderBy().limit()`` (Catalyst's parallel
-  TakeOrderedAndProject); dense positions are materialized via a window
-  ONLY for the inherently positional ops (zip join, order-sensitive concat)
-  — which are presentation-scale by definition.  ``ordered=False`` skips
+  tuple of (column, ascending) pairs ending in the ``__idx`` entry — is the
+  current row order, the one value that says it; ``()`` means unordered.
+  ``sort`` only rewrites the spec (no job, no shuffle); ``take`` compiles
+  to ``orderBy().limit()`` (Catalyst's parallel TakeOrderedAndProject);
+  dense positions are materialized via a window ONLY for the inherently
+  positional ops (zip join, order-sensitive concat) — which are
+  presentation-scale by definition.  ``from_df(df, ordered=False)`` skips
   all of it: the 100 TB mode, where order-sensitive combinators raise
   instead of sorting.
 - **groups**: ``group_cols`` (reference Groups, DataFrame.hs:68) — recorded
@@ -37,6 +38,7 @@ reproduced exactly by the spec-flip in ``sort``.
 from __future__ import annotations
 
 import enum
+import functools
 import importlib
 import inspect
 import math
@@ -67,6 +69,9 @@ IDX = "__idx"
 
 #: order spec entry: (column name, ascending?)
 OrderSpec = tuple[tuple[str, bool], ...]
+
+#: the order spec of a frame whose rows are in ascending ``__idx`` order
+_BY_IDX: OrderSpec = ((IDX, True),)
 
 #: most rows an action fetches to keep on the frame as its answer
 _ROWS_BOUND = 10_000
@@ -142,8 +147,27 @@ def _q(name: str) -> "Column":
     return F.col("`" + name.replace("`", "``") + "`")
 
 
+def _lit(v, dtype: T.DataType) -> Column:
+    """``v``, a collected value of type ``dtype``, as a literal of that
+    type (``F.lit`` builds no struct literal)."""
+    if v is not None and isinstance(dtype, T.StructType):
+        return F.struct(*[_lit(x, f.dataType).alias(f.name) for x, f in zip(v, dtype.fields)])
+    if v is not None and isinstance(dtype, T.ArrayType):
+        return F.array(*[_lit(x, dtype.elementType) for x in v]).cast(dtype)
+    return F.lit(v).cast(dtype)
+
+
 class KevinFrame:
     """Immutable combinator-algebra frame over a Spark DataFrame.
+
+    The row order is one value, ``order_spec``: (column, ascending) pairs
+    ending in the ``__idx`` entry, as the reference keeps one ``Indices``
+    list (DataFrame.hs:66-67); ``()`` means unordered, and ``ordered`` is
+    just ``bool(order_spec)``.  A frame built over a DataFrame with an
+    ``__idx`` column is in ascending ``__idx`` order (``_BY_IDX``).  A
+    descending ``sort`` flips every entry, ``__idx`` included, and ops
+    that renumber ``__idx`` (``append``, ``join``) reset the spec to
+    ``_BY_IDX``.
 
     The first action that fetches every row of ``to_df()`` fixes the
     frame's rows: ``height`` or ``collect`` of at most ``_ROWS_BOUND``
@@ -176,21 +200,17 @@ class KevinFrame:
         traits: dict[str, FieldTraits] | None = None,
         group_cols: Sequence[str] = (),
         pivot: PivotState | None = None,
-        ordered: bool | None = None,
-        order_spec: OrderSpec = (),
-        idx_asc: bool = True,
+        order_spec: OrderSpec | None = None,
     ):
-        if ordered is None:
-            ordered = IDX in df.columns
-        if ordered and IDX not in df.columns:
+        if order_spec is None:
+            order_spec = _BY_IDX if IDX in df.columns else ()
+        if order_spec and IDX not in df.columns:
             raise KevinValueError(f"ordered frame requires a {IDX} column")
         self._df = df
-        self.ordered = ordered
         self.group_cols = tuple(group_cols)
         self.pivot = pivot
-        #: pending lazy sort: [(col, asc), ...]; row order = spec + __idx
+        #: the row order: [(col, asc), ...] ending in (__idx, asc); () = unordered
         self.order_spec: OrderSpec = tuple(order_spec)
-        self.idx_asc = idx_asc
         #: the rows of ``to_df()`` in frame order, once an action fetched them all
         self._rows: list | None = None
         #: the crosstab's cells once fetched; False when they exceed _ROWS_BOUND
@@ -224,7 +244,12 @@ class KevinFrame:
         """
         if ordered and IDX not in df.columns:
             df = df.withColumn(IDX, F.monotonically_increasing_id())
-        return cls(df, traits=traits, ordered=ordered)
+        return cls(df, traits=traits, order_spec=_BY_IDX if ordered else ())
+
+    @property
+    def ordered(self) -> bool:
+        """Whether rows have an order (a non-empty order spec)."""
+        return bool(self.order_spec)
 
     @property
     def df(self) -> DataFrame:
@@ -247,15 +272,13 @@ class KevinFrame:
     # ordering internals
     # ------------------------------------------------------------------ #
 
-    def _order_cols(self) -> list[Column]:
-        """Effective row order: pending sort spec, then __idx."""
-        cols = []
-        for name, asc in self.order_spec:
-            c = _q(name)
-            cols.append(c.asc_nulls_first() if asc else c.desc_nulls_last())
-        idx = F.col(IDX)
-        cols.append(idx.asc() if self.idx_asc else idx.desc())
-        return cols
+    def _order_cols(self, reverse: bool = False) -> list[Column]:
+        """The row order (the order spec) as sort columns; ``reverse=True``
+        gives its exact reverse."""
+        return [
+            _q(name).asc_nulls_first() if asc != reverse else _q(name).desc_nulls_last()
+            for name, asc in self.order_spec
+        ]
 
     def _derive(
         self,
@@ -264,37 +287,38 @@ class KevinFrame:
         traits: dict[str, FieldTraits] | None = None,
         group_cols: Sequence[str] | None = None,
         pivot: PivotState | None | str = "keep",
-        ordered: bool | None = None,
         order_spec: OrderSpec | None = None,
-        idx_asc: bool | None = None,
     ) -> "KevinFrame":
         return KevinFrame(
             df,
             traits=self.traits if traits is None else traits,
             group_cols=self.group_cols if group_cols is None else group_cols,
             pivot=self.pivot if pivot == "keep" else pivot,
-            ordered=self.ordered if ordered is None else ordered,
             order_spec=self.order_spec if order_spec is None else order_spec,
-            idx_asc=self.idx_asc if idx_asc is None else idx_asc,
         )
 
-    def _stable_agg_idx(self, df: DataFrame, keys: Sequence[str]) -> DataFrame:
-        """Stamp ``__idx`` on an aggregation output DETERMINISTICALLY.
+    def _stable_agg_idx(self, df: DataFrame, traits: dict[str, FieldTraits]) -> "KevinFrame":
+        """The frame of ``df``, an aggregation of this frame's groups:
+        groups cleared, and, when this frame is ordered, ``__idx`` stamped
+        DETERMINISTICALLY and rows ascending by group key, then ``__idx``.
+        An unordered frame's aggregation is unordered.
 
         ``monotonically_increasing_id`` on a shuffle output numbers rows
         by arrival order, which can permute between job re-executions —
-        an id captured in one job (init/last) would then select a
+        a key captured in one job (init/last) would then select a
         DIFFERENT row in the next.  Group keys are unique per output row,
         so a key hash is a stable identity; it is kept non-negative so
         ``append``'s offset arithmetic stays valid.  (The ~1e-19 chance
         of a 62-bit collision merely makes two rows tie in an order the
-        key-based sort spec has already decided.)"""
-        if keys:
-            return df.withColumn(
-                IDX, F.pmod(F.xxhash64(*[_q(k) for k in keys]), F.lit(1 << 62))
-            )
-        # global aggregate: exactly one row
-        return df.withColumn(IDX, F.lit(0).cast("long"))
+        key-based spec has already decided.)  A global aggregate has
+        exactly one row, ``__idx`` 0."""
+        keys = self.group_cols
+        spec: OrderSpec = ()
+        if self.ordered:
+            idx = F.pmod(F.xxhash64(*[_q(k) for k in keys]), F.lit(1 << 62)) if keys else F.lit(0)
+            df = df.withColumn(IDX, idx.cast("long"))
+            spec = tuple((k, True) for k in keys) + _BY_IDX
+        return self._derive(df, traits=traits, group_cols=(), pivot=None, order_spec=spec)
 
     def _require_ordered(self, op: str) -> None:
         if not self.ordered:
@@ -306,15 +330,17 @@ class KevinFrame:
 
     def _materialized(self, force: bool = False) -> "KevinFrame":
         """Renumber ``__idx`` to dense 1..n positions under the current
-        order and clear the pending spec.  ``force=True`` renumbers even
-        when no sort is pending (the zip join needs dense 1..n on both
-        sides; raw ``monotonically_increasing_id`` values are sparse).
+        order, so the spec becomes ``_BY_IDX``.  A no-op when it already
+        is (no sort pending); ``force=True`` renumbers even then (the zip
+        join needs dense 1..n on both sides; raw
+        ``monotonically_increasing_id`` values are sparse).
 
         Uses an un-partitioned window — a single-partition sort.  Only the
-        inherently positional ops (zip join, concat) pay this; everything
-        else stays on the lazy spec.
+        inherently positional ops (zip join, concat, and ``append`` or
+        ``melt`` of a side with a pending sort) pay this; everything else
+        stays on the lazy spec.
         """
-        if not force and not self.order_spec and self.idx_asc:
+        if not force and self.order_spec == _BY_IDX:
             return self
         df = self._df.withColumn(
             IDX,
@@ -324,7 +350,7 @@ class KevinFrame:
         helpers = [c for c in df.columns if c.startswith("__") and c != IDX]
         spec_cols = {n for n, _ in self.order_spec}
         drop = [c for c in helpers if c in spec_cols]
-        return self._derive(df.drop(*drop), order_spec=(), idx_asc=True)
+        return self._derive(df.drop(*drop), order_spec=_BY_IDX)
 
     def _check_field(self, name: str) -> None:
         if name not in self.columns:
@@ -550,26 +576,15 @@ class KevinFrame:
 
         if base.group_cols:
             out = base._df.groupBy(*[_q(k) for k in base.group_cols]).agg(*exprs)
-            spec_order = tuple((k, True) for k in base.group_cols)
         else:
             out = base._df.agg(*exprs)
-            spec_order = ()
         traits = {k: base.traits[k] for k in base.group_cols if k in base.traits}
         for name in names:
             dtype = out.schema[name].dataType
             traits[name] = (
                 TEXT_DIM if isinstance(dtype, T.StringType) else NUM_MEASURE
             )
-        if base.ordered:
-            out = self._stable_agg_idx(out, base.group_cols)
-        return self._derive(
-            out,
-            traits=traits,
-            group_cols=(),
-            pivot=None,
-            order_spec=spec_order,
-            idx_asc=True,
-        )
+        return base._stable_agg_idx(out, traits)
 
     def aggregate_udf(
         self,
@@ -597,17 +612,11 @@ class KevinFrame:
             out = self._df.groupBy(*[_q(k) for k in self.group_cols]).agg(
                 _fold(_q(field)).alias(out_name)
             )
-            spec = tuple((k, True) for k in self.group_cols)
         else:
             out = self._df.agg(_fold(_q(field)).alias(out_name))
-            spec = ()
         traits = {k: self.traits[k] for k in self.group_cols if k in self.traits}
         traits[out_name] = NUM_MEASURE
-        if self.ordered:
-            out = self._stable_agg_idx(out, self.group_cols)
-        return self._derive(
-            out, traits=traits, group_cols=(), pivot=None, order_spec=spec, idx_asc=True
-        )
+        return self._stable_agg_idx(out, traits)
 
     def apply_grouped(self, fn, schema: str) -> "KevinFrame":
         """Grouped-map pandas UDF (``applyInPandas``): ``fn(pdf) -> pdf``
@@ -622,7 +631,7 @@ class KevinFrame:
             raise KevinValueError("apply_grouped requires groupby() first")
         base = self._df.select(*[_q(c) for c in self.columns])
         out = base.groupBy(*[_q(k) for k in self.group_cols]).applyInPandas(fn, schema=schema)
-        return KevinFrame(out, group_cols=(), pivot=None, ordered=False)
+        return KevinFrame(out, order_spec=())
 
     def transform_grouped(
         self, agg, field: str, alias: str | None = None
@@ -700,9 +709,7 @@ class KevinFrame:
             spec = ((field, True),) + self.order_spec
             return self._derive(self._df, order_spec=spec, pivot=None)
         spec = ((field, False),) + tuple((n, not a) for n, a in self.order_spec)
-        return self._derive(
-            self._df, order_spec=spec, idx_asc=not self.idx_asc, pivot=None
-        )
+        return self._derive(self._df, order_spec=spec, pivot=None)
 
     def take(self, n: int) -> "KevinFrame":
         """First n rows of the view (reference Combinator.hs:293-295);
@@ -786,56 +793,57 @@ class KevinFrame:
         self._check_nonempty("tail")
         return self.drop(1)
 
-    def _reverse_order_cols(self) -> list[Column]:
-        """The exact reverse of the row order (``_order_cols``)."""
-        return self._derive(
-            self._df,
-            order_spec=tuple((n, not asc) for n, asc in self.order_spec),
-            idx_asc=not self.idx_asc,
-        )._order_cols()
-
-    def _last_idx(self, op: str):
-        """``__idx`` of the view's last row, found with a reverse-order
-        top-1 (TakeOrderedAndProject: per-partition top-1, tiny merge) —
-        no full count, no single-partition shuffle.  The same job checks
-        emptiness: no row raises ``op``'s empty-frame error."""
-        row = self._df.orderBy(*self._reverse_order_cols()).select(IDX).first()
+    def _is_last_row(self, op: str) -> Column:
+        """A predicate true on the view's last row alone: every order spec
+        column null-safely equal to that row's value.  The spec's key is
+        unique per row even where ``__idx`` repeats (``melt`` adds its
+        variable position).  One reverse-order top-1 job finds it
+        (TakeOrderedAndProject: per-partition top-1, tiny merge) — no full
+        count, no single-partition shuffle — and checks emptiness: no row
+        raises ``op``'s empty-frame error."""
+        names = [n for n, _ in self.order_spec]
+        row = self._df.orderBy(*self._order_cols(reverse=True)).select(
+            *[_q(n) for n in names]
+        ).first()
         if row is None:
             raise KevinValueError(f"{op}: empty data frame")
-        return row[0]
+        types = [self._df.schema[n].dataType for n in names]
+        return functools.reduce(
+            Column.__and__,
+            [_q(n).eqNullSafe(_lit(v, t)) for n, v, t in zip(names, row, types)],
+        )
 
     def init(self) -> "KevinFrame":
         """All but the last row; errors on empty (Combinator.hs:305-307).
 
         A bounded frame is fetched once, and the result is ``take(n - 1)``
         keeping all but the last of its rows.  Any other frame is planned
-        as a distributed filter on the last row's ``__idx`` (one cheap
-        reverse top-1 job) — not count-then-limit, which paid a full count
-        and funneled n-1 rows through a global limit — and the result
-        keeps all but the last of the rows the frame holds, if any."""
+        as a distributed filter on the last row's order key (one cheap
+        reverse top-1 job, ``_is_last_row``) — not count-then-limit, which
+        paid a full count and funneled n-1 rows through a global limit —
+        and the result keeps all but the last of the rows the frame holds,
+        if any."""
         self._require_ordered("init")
         if self._row_bound() is None:
-            return self._sliced(
-                self._df.where(F.col(IDX) != F.lit(self._last_idx("init"))), slice(-1)
-            )
+            return self._sliced(self._df.where(~self._is_last_row("init")), slice(-1))
         self._check_nonempty("init")
         return self.take(len(self._rows) - 1)
 
     def last(self) -> "KevinFrame":
         """Last row only; errors on empty (Combinator.hs:309-311).
 
-        Planned as a reverse-order top-1: the order (spec, then ``__idx``)
-        is total, so that is the last row even where ``__idx`` repeats
-        (``melt``).  A bounded frame is fetched once and the result keeps
-        the last of its rows; any other frame checks emptiness with one
-        reverse top-1 job (``_last_idx``)."""
+        Planned as a reverse-order top-1: the order spec is total, so that
+        is the last row even where ``__idx`` repeats (``melt``).  A
+        bounded frame is fetched once and the result keeps the last of its
+        rows; any other frame checks emptiness with one reverse top-1 job
+        (``_is_last_row``)."""
         self._require_ordered("last")
         if self._bounded_rows() is None:
-            self._last_idx("last")
+            self._is_last_row("last")
         else:
             self._check_nonempty("last")
         return self._sliced(
-            self._df.orderBy(*self._reverse_order_cols()).limit(1), slice(-1, None)
+            self._df.orderBy(*self._order_cols(reverse=True)).limit(1), slice(-1, None)
         )
 
     # ------------------------------------------------------------------ #
@@ -904,37 +912,33 @@ class KevinFrame:
 
         Unordered frames union with zero overhead (pure unionByName);
         ordered frames keep exact combined order by OFFSETTING the right
-        side's ``__idx`` past the left side's maximum — one tiny parallel
-        ``max()`` job, no global window, no single-partition sort, so an
-        ordered append of two huge frames stays fully distributed.
+        side's ``__idx`` past the left side's maximum.  The offset is a
+        scalar subquery in the plan, so ``append`` runs no job: an action
+        that reads ``__idx`` runs the tiny parallel ``max()`` inside it,
+        and Catalyst prunes the subquery when nothing reads ``__idx``
+        (``append`` then ``groupby``/``aggregate``).  No global window, no
+        single-partition sort, so an ordered append of two huge frames
+        stays fully distributed; only a side with a pending sort is
+        renumbered (``_materialized``).
         """
         left_cols = {n: self.traits.get(n) for n in self.columns}
         right_cols = {n: other.traits.get(n) for n in other.columns}
         if left_cols != right_cols:
             raise KevinValueError("Can't append inconsistent data frames")
-        if self.ordered and other.ordered:
-            # resolve any pending sort into __idx order on each side (no-op
-            # when no sort is pending: sparse monotonic ids already carry
-            # the row order)
-            l = self._materialized()
-            r = other._materialized()
-            lf = l._df.select(*[_q(c) for c in self.columns], IDX)
-            rf = r._df.select(*[_q(c) for c in self.columns], IDX)
-            # right rows must sort after every left row: shift right ids by
-            # (left max + 1); monotonic ids are >= 0 and both sides fit in
-            # int64 with room to spare
-            left_max = lf.agg(F.max(IDX)).first()[0]
-            offset = (left_max if left_max is not None else -1) + 1
-            rf = rf.withColumn(IDX, (F.col(IDX) + F.lit(offset)).cast("long"))
-            out = lf.unionByName(rf)
-            return self._derive(
-                out, group_cols=(), pivot=None, order_spec=(), idx_asc=True
-            )
-        out = self._df.select(*[_q(c) for c in self.columns]).unionByName(
-            other._df.select(*[_q(c) for c in other.columns])
-        )
+        if not (self.ordered and other.ordered):
+            return self._set_op(other, DataFrame.unionByName)
+        # resolve any pending sort into __idx order on each side (no-op
+        # when no sort is pending: sparse monotonic ids already carry
+        # the row order)
+        lf = self._materialized()._df.select(*[_q(c) for c in self.columns], IDX)
+        rf = other._materialized()._df.select(*[_q(c) for c in self.columns], IDX)
+        # right rows must sort after every left row: shift right ids by
+        # (left max + 1); monotonic ids are >= 0 and both sides fit in
+        # int64 with room to spare
+        offset = F.coalesce(lf.agg(F.max(IDX)).scalar(), F.lit(-1)) + 1
+        rf = rf.withColumn(IDX, (F.col(IDX) + offset).cast("long"))
         return self._derive(
-            out, group_cols=(), pivot=None, ordered=False, order_spec=(), idx_asc=True
+            lf.unionByName(rf), group_cols=(), pivot=None, order_spec=_BY_IDX
         )
 
     def join(self, other: "KevinFrame") -> "KevinFrame":
@@ -970,7 +974,7 @@ class KevinFrame:
             traits[rename.get(c, c)] = other.traits.get(c)
         out = self._derive(
             out.select(*[_q(c) for c in names], IDX),
-            traits=traits, group_cols=(), pivot=None, order_spec=(), idx_asc=True,
+            traits=traits, group_cols=(), pivot=None, order_spec=_BY_IDX,
         )
         if self._rows is not None and other._rows is not None:
             row = Row(*names)
@@ -1127,41 +1131,34 @@ class KevinFrame:
             "left_anti",
             "cross",
         )
-        ordered = self.ordered and keeps_left_rows
-        if not ordered and IDX in out.columns:
+        spec = self.order_spec if keeps_left_rows else ()
+        if not spec and IDX in out.columns:
             out = out.drop(IDX)
-        return self._derive(
-            out,
-            traits=traits,
-            group_cols=(),
-            pivot=None,
-            ordered=ordered,
-            order_spec=self.order_spec if ordered else (),
-            idx_asc=self.idx_asc if ordered else True,
-        )
+        return self._derive(out, traits=traits, group_cols=(), pivot=None, order_spec=spec)
 
     # ------------------------------------------------------------------ #
     # set operations (absent in reference — SURVEY §2.6; free in Spark)
     # ------------------------------------------------------------------ #
 
+    def _set_op(self, other: "KevinFrame", op: Callable[..., DataFrame]) -> "KevinFrame":
+        """``op`` over the two frames' user columns, as an unordered frame
+        (a set operation has no meaningful row order); groups cleared."""
+        out = op(
+            self._df.select(*[_q(c) for c in self.columns]),
+            other._df.select(*[_q(c) for c in other.columns]),
+        )
+        return self._derive(out, group_cols=(), pivot=None, order_spec=())
+
     def union_distinct(self, other: "KevinFrame") -> "KevinFrame":
         """Set union (duplicates removed).  Produces an unordered frame:
         distinct() has no meaningful row order."""
-        out = self._df.select(*[_q(c) for c in self.columns]).unionByName(
-            other._df.select(*[_q(c) for c in other.columns])
-        ).distinct()
-        return self._derive(out, group_cols=(), pivot=None, ordered=False,
-                            order_spec=(), idx_asc=True)
+        return self._set_op(other, lambda l, r: l.unionByName(r).distinct())
 
     def intersect(self, other: "KevinFrame") -> "KevinFrame":
-        out = self._df.select(*[_q(c) for c in self.columns]).intersect(other._df.select(*[_q(c) for c in other.columns]))
-        return self._derive(out, group_cols=(), pivot=None, ordered=False,
-                            order_spec=(), idx_asc=True)
+        return self._set_op(other, DataFrame.intersect)
 
     def except_all(self, other: "KevinFrame") -> "KevinFrame":
-        out = self._df.select(*[_q(c) for c in self.columns]).exceptAll(other._df.select(*[_q(c) for c in other.columns]))
-        return self._derive(out, group_cols=(), pivot=None, ordered=False,
-                            order_spec=(), idx_asc=True)
+        return self._set_op(other, DataFrame.exceptAll)
 
     # ------------------------------------------------------------------ #
     # pivot state (reference DataFrame.hs:273-283, Combinator.hs:239-267)
@@ -1240,13 +1237,12 @@ class KevinFrame:
                 traits=traits,
                 group_cols=(),
                 pivot=None,
-                order_spec=(),
-                idx_asc=True,
+                order_spec=_BY_IDX if self.ordered else (),
             )
         # a pending sort may reference columns that don't survive the
         # unpivot (the var columns themselves, or unrelated ones):
         # materialize dense positions first so the order is baked into __idx
-        base_kf = self._materialized() if (self.ordered and self.order_spec) else self
+        base_kf = self._materialized() if self.ordered else self
         base = base_kf._df.select(*[_q(c) for c in ids + vars_], *([IDX] if self.ordered else []))
         base = base.withColumns({v: _q(v).cast("double") for v in vars_})
         out = base.unpivot(
@@ -1265,15 +1261,14 @@ class KevinFrame:
             out = out.select(
                 *[_q(c) for c in ids], "variable", "value", IDX, "__vpos"
             )
-            # base was materialized above, so its spec is empty and row
-            # order lives in __idx; var-major = (__vpos, __idx)
+            # base was materialized above, so row order lives in __idx;
+            # var-major = (__vpos, __idx)
             return self._derive(
                 out,
                 traits=traits,
                 group_cols=(),
                 pivot=None,
-                order_spec=(("__vpos", True),),
-                idx_asc=True,
+                order_spec=(("__vpos", True),) + _BY_IDX,
             )
         out = out.select(*[_q(c) for c in ids], "variable", "value")
         return self._derive(out, traits=traits, group_cols=(), pivot=None)

@@ -16,6 +16,7 @@ from kevinlang_spark import KevinFrame, SortOrder
 from kevinlang_spark.errors import KevinValueError
 from kevinlang_spark.render import render_frame
 from kevinlang_spark.sources.csv import read_csv
+from kevinlang_spark.sources.parquet import read_parquet
 from test_csv_cache import _jobs, _write
 
 
@@ -349,33 +350,73 @@ def test_last_of_melt_is_one_row(spark, simple_frame):
     assert simple_frame.take(13).melt(["city"], ["sale", "cost"]).last().collect() == want
 
 
-#: (plan, height + render) jobs of three analyst question shapes on the
-#: simple CSV; the plan's one bounded fetch answers height() and the render
+def _crosstab(f, dim):
+    """year_crosstab's shape: the pivot frame after ``pivot_table()``,
+    which fetched its crosstab cells, as an analyst asks for the wide
+    table before the render."""
+    p = f.filter("year", lambda c: c >= 2002).cast(["city", "year"], [], "sum", "sale").unstack("year")
+    p.pivot_table()
+    return p
+
+
+#: (plan, height + render) jobs of the analyst question shapes on the simple
+#: CSV and a small parquet dimension; a plan's one bounded fetch answers
+#: height() and the render, and append runs no job of its own
 _SHAPES = {
     "melt_tail": (
-        lambda f: f.drop(2).take(8).select(["year", "sale", "cost"]).melt(["year"], ["sale", "cost"]).tail(),
+        lambda f, dim: f.drop(2).take(8).select(["year", "sale", "cost"]).melt(["year"], ["sale", "cost"]).tail(),
         6, 0,
     ),
-    "take_last": (lambda f: f.sort("sale", SortOrder.DESCENDING).take(5).last(), 1, 0),
+    "take_last": (lambda f, dim: f.sort("sale", SortOrder.DESCENDING).take(5).last(), 1, 0),
     "zip": (
-        lambda f: f.filter("year", lambda c: c == 2001).take(4).select(["city", "sale"]).join(
+        lambda f, dim: f.filter("year", lambda c: c == 2001).take(4).select(["city", "sale"]).join(
             f.filter("year", lambda c: c > 2001).take(4).select(["city", "cost"])
         ),
         2, 0,
     ),
+    "top_stores": (lambda f, dim: _top_cities(f), 0, 2),
+    "append": (
+        lambda f, dim: f.filter("city", lambda c: c == "hangzhou").append(
+            f.filter("city", lambda c: c == "beijing")
+        ),
+        0, 3,
+    ),
+    "store_pair_append": (
+        lambda f, dim: f.filter("city", lambda c: c == "hangzhou").append(
+            f.filter("city", lambda c: c == "beijing")
+        ).groupby(["year"]).aggregate_many([("sum", "sale"), ("mean", "cost"), ("count", "sale", "n")]),
+        0, 2,
+    ),
+    "region_merge": (
+        lambda f, dim: f.merge(dim, on="city", broadcast_other=True).groupby(["region"]).aggregate("sum", "sale"),
+        0, 3,
+    ),
+    "year_crosstab": (_crosstab, 2, 0),
 }
 
 
+@pytest.fixture(scope="module")
+def regions(spark, tmp_path_factory):
+    """A small parquet dimension: the region of each simple.csv city."""
+    path = str(tmp_path_factory.mktemp("dim") / "regions.parquet")
+    spark.createDataFrame(
+        [("hangzhou", "east"), ("shanghai", "east"), ("beijing", "north")],
+        "city string, region string",
+    ).write.parquet(path)
+    return path
+
+
 @pytest.mark.parametrize("shape", sorted(_SHAPES))
-def test_question_shape_job_counts(spark, simple_csv, shape):
+def test_question_shape_job_counts(spark, simple_csv, regions, shape):
     build, plan_jobs, answer_jobs = _SHAPES[shape]
     f = read_csv(spark, simple_csv)
-    jobs, out = _jobs(spark, lambda: build(f))
+    dim = read_parquet(spark, regions, ordered=True)
+    jobs, out = _jobs(spark, lambda: build(f, dim))
     assert jobs == plan_jobs
     jobs, (height, text) = _jobs(spark, lambda: (out.height(), render_frame(out)))
     assert jobs == answer_jobs
-    fresh = _unkept(build(read_csv(spark, simple_csv)))
-    assert height == fresh.to_df().count()
+    fresh = _unkept(build(read_csv(spark, simple_csv), dim))
+    assert height == (fresh.height() if fresh.pivot else fresh.to_df().count())
     assert text == render_frame(fresh)
 
 

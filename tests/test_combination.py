@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kevinlang_spark import SortOrder
 from kevinlang_spark.errors import KevinValueError
 
 
@@ -39,6 +40,35 @@ def test_append_column_order_insensitive(simple_frame):
 def test_append_mismatch_errors(simple_frame):
     with pytest.raises(KevinValueError):
         simple_frame.append(simple_frame.select(["city", "cost"]))
+
+
+def _rows(kf):
+    return [tuple(r) for r in kf.to_df().collect()]
+
+
+def test_nested_append_keeps_each_sides_order(simple_frame):
+    """Each side's rows in its own order (ascending, descending, twice
+    descending), sides one after another — also a side appended twice."""
+    x = simple_frame.sort("sale")
+    y = simple_frame.take(5).sort("cost", SortOrder.DESCENDING)
+    z = simple_frame.sort("year", SortOrder.DESCENDING).sort("city", SortOrder.DESCENDING)
+    out = x.append(y).append(z).append(x)
+    assert _rows(out) == _rows(x) + _rows(y) + _rows(z) + _rows(x)
+    assert out.height() == 13 + 5 + 13 + 13
+
+
+@pytest.mark.parametrize("right", ["bounded", "unbounded"])
+def test_positional_ops_of_an_appended_frame(simple_frame, right):
+    a = simple_frame.sort("cost", SortOrder.DESCENDING).take(4)
+    b = simple_frame.take(3) if right == "bounded" else simple_frame.drop(10)
+    u = a.append(b)
+    want = _rows(a) + _rows(b)
+    assert _rows(u.head()) == want[:1]
+    assert _rows(u.tail()) == want[1:]
+    assert _rows(u.init()) == want[:-1]
+    assert _rows(u.last()) == want[-1:]
+    zipped = u.select(["city"]).join(u.select(["sale"]))
+    assert _rows(zipped) == [(r[1], r[4]) for r in want]
 
 
 def test_positional_join(simple_frame):

@@ -110,6 +110,67 @@ def test_head_tail_init_last(simple_frame):
     assert last["sale"] == 3211.0
 
 
+def _rows(kf):
+    return [tuple(r) for r in kf.to_df().collect()]
+
+
+@pytest.mark.parametrize("bounded", [False, True])
+def test_init_last_after_two_descending_sorts(simple_frame, bounded):
+    """Two descending sorts flip the ``__idx`` tiebreak twice: ties come
+    back in frame order, and init/last read the same order."""
+    f = simple_frame.take(13) if bounded else simple_frame
+    f = f.sort("year", SortOrder.DESCENDING).sort("city", SortOrder.DESCENDING)
+    want = _rows(f)
+    assert _rows(f.init()) == want[:-1]
+    assert _rows(f.last()) == want[-1:]
+
+
+def test_init_of_melt_drops_one_row(simple_frame):
+    """melt repeats ``__idx`` once per variable; init() drops the one
+    last row of the var-major order."""
+    long = simple_frame.melt(["city"], ["sale", "cost"])
+    assert _rows(long.init()) == _rows(long)[:-1]
+    assert long.init().height() == 25
+
+
+@pytest.mark.parametrize("field", ["a", "s"])
+def test_init_last_after_sort_on_array_or_struct(spark, tmp_path, field):
+    """The last row's order key holds an array or struct value: init()
+    filters it out with a literal of that type."""
+    df = spark.createDataFrame(
+        [([2, 1], (1, "x")), ([1], (None, "y")), (None, None), ([1, None], (1, None)), ([], (0, "z"))],
+        "a array<int>, s struct<p:int,q:string>",
+    )
+    df.write.parquet(str(tmp_path / "t"))
+    f = KevinFrame.from_df(spark.read.parquet(str(tmp_path / "t")))
+    for order in SortOrder:
+        g = f.sort(field, order)
+        want = _rows(g)
+        assert _rows(g.init()) == want[:-1]
+        assert _rows(g.last()) == want[-1:]
+
+
+def test_ordered_only_where_rows_keep_an_order(spark, simple_frame):
+    dim = KevinFrame.from_df(
+        spark.createDataFrame([("hangzhou", "east")], "city string, region string")
+    )
+    unordered = [
+        simple_frame.merge(dim, on="city", how="right"),
+        simple_frame.merge(dim, on="city", how="full"),
+        simple_frame.union_distinct(simple_frame),
+        simple_frame.intersect(simple_frame),
+        simple_frame.except_all(simple_frame),
+        simple_frame.groupby("city").apply_grouped(lambda p: p[["city"]], "city string"),
+        simple_frame.describe(),
+    ]
+    for kf in unordered:
+        assert not kf.ordered and kf.order_spec == ()
+    assert simple_frame.merge(dim, on="city").ordered
+    assert KevinFrame(simple_frame.df).ordered
+    assert KevinFrame(simple_frame.df).order_spec == (("__idx", True),)
+    assert not KevinFrame(simple_frame.df.drop("__idx")).ordered
+
+
 def test_head_on_empty_errors(simple_frame):
     empty = simple_frame.take(0)
     for op in ("head", "tail", "init", "last"):
