@@ -8,8 +8,9 @@ carries the state Spark does not:
 
 - **order**: a hidden ``__idx`` LongType column gives rows stable identity
   (reference Indices, DataFrame.hs:66-67), and a LAZY ``order spec`` — a
-  tuple of (column, ascending) pairs ending in the ``__idx`` entry — is the
-  current row order, the one value that says it; ``()`` means unordered.
+  tuple of (column, ascending) pairs ending in the ``__idx`` entry (then,
+  after a ``merge``, the right row's index) — is the current row order,
+  the one value that says it; ``()`` means unordered.
   ``sort`` only rewrites the spec (no job, no shuffle); ``take`` compiles
   to ``orderBy().limit()`` (Catalyst's parallel TakeOrderedAndProject);
   dense positions are materialized via a window ONLY for the inherently
@@ -163,7 +164,9 @@ class KevinFrame:
     The row order is one value, ``order_spec``: (column, ascending) pairs
     ending in the ``__idx`` entry, as the reference keeps one ``Indices``
     list (DataFrame.hs:66-67); ``()`` means unordered, and ``ordered`` is
-    just ``bool(order_spec)``.  A frame built over a DataFrame with an
+    just ``bool(order_spec)``.  A ``merge`` that can match a left row
+    more than once appends the right row's index, so the spec stays a
+    unique key.  A frame built over a DataFrame with an
     ``__idx`` column is in ascending ``__idx`` order (``_BY_IDX``).  A
     descending ``sort`` flips every entry, ``__idx`` included, and ops
     that renumber ``__idx`` (``append``, ``join``) reset the spec to
@@ -215,6 +218,8 @@ class KevinFrame:
         self._rows: list | None = None
         #: the crosstab's cells once fetched; False when they exceed _ROWS_BOUND
         self._cells: _Cells | bool | None = None
+        #: ``to_df()``'s plan once built
+        self._user_df: DataFrame | None = None
         if traits is None:
             traits = {
                 f.name: infer_traits_for_spark_type(f.name, f.dataType)
@@ -258,11 +263,14 @@ class KevinFrame:
 
     def to_df(self) -> DataFrame:
         """User-facing DataFrame: hidden columns dropped, rows in frame
-        order (a parallel range-partitioned sort, not a window)."""
-        cols = self.columns
-        if self.ordered:
-            return self._df.orderBy(*self._order_cols()).select(*[_q(c) for c in cols])
-        return self._df.select(*[_q(c) for c in cols])
+        order (a parallel range-partitioned sort, not a window).  The
+        plan is built on the first call and the same DataFrame is
+        returned after that: the frame is immutable, and each Column
+        built in Python costs Py4J round trips."""
+        if self._user_df is None:
+            df = self._df.orderBy(*self._order_cols()) if self.ordered else self._df
+            self._user_df = df.select(*[_q(c) for c in self.columns])
+        return self._user_df
 
     @property
     def columns(self) -> list[str]:
@@ -1064,20 +1072,34 @@ class KevinFrame:
 
         ``broadcast_other=True`` hints a broadcast-hash join for dimension
         tables (no shuffle of the fact side).  Row order follows the left
-        frame (its order spec survives); 1:N joins interleave matches of
-        the same left row in right-side order nondeterministically — use an
-        unordered frame when that matters at scale.
+        frame: its order spec survives, and when the join can match a left
+        row more than once (inner, left or cross), the right row's index
+        follows it in the spec — the right side's ``__idx`` when it is in
+        ``__idx`` order, else ``monotonically_increasing_id()`` over its
+        rows — so the matches of one left row keep the right side's order
+        and the full order key stays unique (``init``/``last`` pick one
+        row).  Right and full outer joins give an unordered frame.
         """
-        r = other._df.drop(IDX) if IDX in other._df.columns else other._df
-        r = r.drop(*[c for c in r.columns if c.startswith("__")])
+        semi_anti = how in (
+            "semi", "leftsemi", "left_semi", "anti", "leftanti", "left_anti"
+        )
+        keeps_left_rows = semi_anti or how in (
+            "inner", "left", "leftouter", "left_outer", "cross"
+        )
+        r = other._df
+        ridx = None
+        if self.ordered and keeps_left_rows and not semi_anti:
+            ridx = "__ridx"
+            while ridx in self._df.columns:  # a merge of a merged frame
+                ridx += "_"
+            rid = F.col(IDX) if other.order_spec == _BY_IDX else F.monotonically_increasing_id()
+            r = r.withColumn(ridx, rid)
+        r = r.drop(*[c for c in r.columns if c.startswith("__") and c != ridx])
         key_names = set()
         if isinstance(on, str):
             key_names = {on}
         elif isinstance(on, (list, tuple)) and all(isinstance(x, str) for x in on):
             key_names = set(on)
-        semi_anti = how in (
-            "semi", "leftsemi", "left_semi", "anti", "leftanti", "left_anti"
-        )
         # disambiguate overlapping non-key names (a '_r' suffix, like the
         # positional join) — duplicate names would make the frame
         # unaddressable (AMBIGUOUS_REFERENCE on the next select).
@@ -1118,20 +1140,9 @@ class KevinFrame:
                 name = rename.get(c, c)
                 if name in out.columns and name not in traits:
                     traits[name] = other.traits.get(c)
-        keeps_left_rows = how in (
-            "inner",
-            "left",
-            "leftouter",
-            "left_outer",
-            "semi",
-            "leftsemi",
-            "left_semi",
-            "anti",
-            "leftanti",
-            "left_anti",
-            "cross",
-        )
         spec = self.order_spec if keeps_left_rows else ()
+        if ridx is not None:
+            spec += ((ridx, True),)
         if not spec and IDX in out.columns:
             out = out.drop(IDX)
         return self._derive(out, traits=traits, group_cols=(), pivot=None, order_spec=spec)
@@ -1299,22 +1310,26 @@ class KevinFrame:
         out = self.groupby(rows + cols).aggregate(agg, value_field)
         return out._derive(out._df, pivot=PivotState(tuple(rows), tuple(cols), value_field))
 
+    @functools.cached_property
     def _keyed(self) -> DataFrame:
         """The frame's rows, plus ``__ckey`` — the pivot key of each row's
         col path — when the col tree is not empty.  The key is NULL-safe
         and collision-safe: NULLs coalesce to a marker and values join
         with a unit separator (plain concat_ws would collapse ('a', NULL)
-        and (NULL, 'a'), and 'a/b' with ('a','b'))."""
+        and (NULL, 'a'), and 'a/b' with ('a','b')).  Built once per frame:
+        the kept cells and the wide table both read it."""
         if not self.pivot.col_fields:
             return self._df
         return self._df.withColumn("__ckey", F.concat_ws("\x1f", *[
             F.coalesce(_q(c).cast("string"), F.lit("\x00null")) for c in self.pivot.col_fields
         ]))
 
+    @functools.cached_property
     def _cell(self) -> Column:
         """A crosstab cell: the value of its one row; a cell that more than
         one row lands in raises the reference's "invalid data (many values
-        for the same index)" (DataFrame.hs:145) when it is computed."""
+        for the same index)" (DataFrame.hs:145) when it is computed.
+        Built once per frame, like ``_keyed``."""
         val = self.pivot.value_field
         return (
             F.when(F.count(F.lit(1)) > 1, F.raise_error(F.lit(MANY_VALUES)))
@@ -1336,8 +1351,8 @@ class KevinFrame:
             nr = len(self.pivot.row_fields)
             nc = len(self.pivot.col_fields)
             by = [_q(c) for c in self.pivot.row_fields + self.pivot.col_fields]
-            q = self._keyed().groupBy(*by).agg(
-                self._cell(), *([F.first("__ckey")] if nc else [])
+            q = self._keyed.groupBy(*by).agg(
+                self._cell, *([F.first("__ckey")] if nc else [])
             )
             got = (q.orderBy(*by) if by else q).limit(_ROWS_BOUND + 1).collect()
             if len(got) > _ROWS_BOUND:
@@ -1375,7 +1390,7 @@ class KevinFrame:
         rows = [_q(c) for c in self.pivot.row_fields]
         cols = [_q(c) for c in self.pivot.col_fields]
         cells = self._kept_cells()
-        df = self._keyed()
+        df = self._keyed
         if not rows:
             # one wide row, and valid input holds at most one row per col
             # path: a single partition runs it without an exchange
@@ -1390,7 +1405,7 @@ class KevinFrame:
                 found = (q if limit is None else q.limit(limit)).collect()
                 paths, keys = [tuple(r)[:-1] for r in found], [r[-1] for r in found]
             gb = df.groupBy(*rows).pivot("__ckey", keys)
-        wide = gb.agg(self._cell())
+        wide = gb.agg(self._cell)
         if not rows:
             return paths, wide
         if cells is None:

@@ -23,6 +23,19 @@ def get_spark(
 
     On a real cluster, pass ``master=None`` with externally-managed deploy
     conf; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
+
+    The session sets ``spark.python.sql.dataFrameDebugging.enabled`` to
+    ``false``.  With it on (PySpark's default), every Column method and
+    ``functions`` call walks the Python stack and records its call site in
+    the JVM: ``F.col`` sends 13 Py4J commands instead of 3, and building
+    a plan costs about three times the round trips.  The price is that a
+    Spark runtime error no longer carries the Python call site of the
+    failing expression (its "DataFrame" query context); pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    to get it back.  PySpark reads this conf once per Python process, the
+    first time a Column is built, from the session active then: a process
+    that built Columns under another session keeps that session's
+    setting, whatever this one says.
     """
     # Python workers must resolve this package regardless of the driver's
     # cwd (mapInPandas UDFs pickle module-level functions by reference)
@@ -66,6 +79,9 @@ def get_spark(
         # TIMESTAMP(NANOS) parquet columns (events.ts) surface as long;
         # sources.load_events converts ns→timestamp explicitly
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # no per-call call-site capture: it costs each Column built in
+        # Python about 10 extra Py4J round trips (see the docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # quieter local runs
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

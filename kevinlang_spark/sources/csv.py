@@ -25,9 +25,13 @@ is the file's real path, device, inode, size, mtime and ctime, plus
 ``spark.sql.caseSensitive``, which decides how duplicate headers are
 named.  One entry serves every ``strict``, ``decimal`` and ``ordered``
 setting: the traits, casts and strict-mode error are derived from the
-stored counts on every call.  A repeat read of an unchanged single local
-file therefore runs no Spark job before its first action; directories,
-globs and remote paths are inferred on every call.
+stored counts on every call.  The entry also keeps the typed plan (the
+relation, its casts and ``__idx``) per ``decimal`` and ``ordered``
+setting, and a later read gets it back with fresh attributes
+(``filecache.plan_once``) instead of building it again.  A repeat read
+of an unchanged single local file therefore runs no Spark job before its
+first action and sends a handful of Py4J commands; directories, globs
+and remote paths are inferred on every call.
 """
 
 from __future__ import annotations
@@ -100,9 +104,7 @@ def read_csv(
 
     key = filecache.version_key(spark, path, "csv", ("spark.sql.caseSensitive",))
     schema, stats = filecache.infer_once(spark, key, inference)
-    if raw is None:  # a stored entry: the same reader, given its schema
-        raw = _reader(spark).schema(schema).csv(path)
-    cols = raw.columns
+    cols = schema.names
     total = stats["__total"] or 0
 
     traits: dict[str, FieldTraits] = {}
@@ -131,7 +133,14 @@ def read_csv(
         else:
             traits[c] = TEXT_DIM
 
-    df = raw.withColumns({c: F.col(f"`{c}`").cast(t) for c, t in casts.items()})
+    def typed():
+        # a stored entry without this variant's plan: the same reader,
+        # given its schema
+        src = raw if raw is not None else _reader(spark).schema(schema).csv(path)
+        df = src.withColumns({c: F.col(f"`{c}`").cast(t) for c, t in casts.items()})
+        return KevinFrame.from_df(df, ordered=ordered, traits=traits).df
+
+    df = filecache.plan_once(spark, key, (decimal, ordered), typed)
     return KevinFrame.from_df(df, ordered=ordered, traits=traits)
 
 

@@ -1,11 +1,12 @@
-"""Session-scoped memo of a source's inference pass, keyed on file version.
+"""Session-scoped memo of a source's inference pass and typed plan, keyed
+on file version.
 
 Reading a CSV or parquet file without a schema costs Spark jobs before the
 first action: a header scan and a statistics aggregate for CSV, a footer
 read for parquet.  For one regular local file the result only changes when
-the file does, so a session runs it once per file version and passes the
-stored schema to ``.schema()`` afterwards; the plan above the scan is the
-same either way.
+the file does, so a session runs it once per file version, and a read
+that finds no kept plan passes the stored schema to ``.schema()``; the
+plan above the scan is the same either way.
 
 A file version is (real path, ``st_dev``, ``st_ino``, ``st_size``,
 ``st_mtime_ns``, ``st_ctime_ns``) plus the session confs that change what
@@ -19,6 +20,15 @@ same size within one mtime tick would otherwise leave the key unchanged
 store, bounded to ``MAX_ENTRIES``, least recently used first out, and
 held only as long as the session object lives; a session built after
 ``stop()`` is a new object and starts with an empty store.
+
+A stored entry also keeps the typed plan a source builds over the pass's
+result (``plan_once``): the relation, its casts and ``__idx``, one per
+read variant.  A later read of the same file version gets that plan
+re-aliased with ``toDF`` (one Py4J call), not rebuilt, so its columns are
+fresh attributes: two reads of one file join on ``a["k"] == b["k"]`` as
+reads of two files do.  The entry keeps the plan's Java object, which
+holds no reference to the Python session, so the store still goes when
+the session object does.
 """
 
 from __future__ import annotations
@@ -29,10 +39,11 @@ import threading
 import time
 import weakref
 from collections import OrderedDict
-from typing import Any, Callable
+from dataclasses import dataclass, field
+from typing import Any, Callable, Hashable
 from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: entries kept per session
 MAX_ENTRIES = 64
@@ -43,6 +54,16 @@ _GLOB_CHARS = frozenset("*?[]{}\\")
 
 _stores: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _lock = threading.Lock()
+
+
+@dataclass
+class _Entry:
+    """One stored file version: the inference pass's result, and the
+    typed plans built over it by read variant, each as its Java DataFrame
+    and a Java Seq of its column names (so re-aliasing is one call)."""
+
+    value: Any
+    plans: dict = field(default_factory=dict)
 
 
 def _stat(real: str) -> tuple | None:
@@ -103,13 +124,39 @@ def infer_once(spark: SparkSession, key: tuple | None, infer: Callable[[], Any])
         store = _stores.setdefault(spark, OrderedDict())
         if key in store:
             store.move_to_end(key)
-            return store[key]
+            return store[key].value
     started = time.time_ns()
     value = infer()
     _, real, st, _ = key
     if _stat(real) == st and st[3] <= started - RACY_NS:
         with _lock:
-            store[key] = value
+            store[key] = _Entry(value)
             while len(store) > MAX_ENTRIES:
                 store.popitem(last=False)
     return value
+
+
+def plan_once(
+    spark: SparkSession,
+    key: tuple | None,
+    variant: Hashable,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The typed plan of the file version ``key`` read as ``variant``.
+
+    When ``infer_once`` stored ``key``, the first call keeps ``build()``'s
+    plan in that entry and returns it; later calls return it re-aliased
+    (``toDF``: the same plan over fresh attribute ids).  Without a stored
+    entry, ``build()`` runs every call."""
+    with _lock:
+        entry = _stores.get(spark, {}).get(key) if key is not None else None
+        kept = entry.plans.get(variant) if entry is not None else None
+    if kept is not None:
+        jdf, jnames = kept
+        return DataFrame(jdf.toDF(jnames), spark)
+    df = build()
+    if entry is not None:
+        kept = (df._jdf, df._jseq(df.columns))
+        with _lock:
+            entry.plans[variant] = kept
+    return df

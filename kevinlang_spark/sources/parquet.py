@@ -3,6 +3,11 @@
 The reference only reads CSV (src/Data/DataFrame.hs:182-190); parquet is the
 100 TB-scale equivalent: predicate pushdown and column pruning reach the
 footer/page level, and splits parallelize across executors for free.
+
+``read_parquet`` of one local file reads its footer once per file version
+in a session and keeps the plan it builds over it (``sources.filecache``):
+a repeat read runs no Spark job and gets that plan back with fresh
+attributes.
 """
 
 from __future__ import annotations
@@ -48,8 +53,11 @@ def read_parquet(
     the reference's presentation semantics.
 
     A single local file's schema is read once per file version in a
-    session (``sources.filecache``); later reads pass it to ``.schema()``
-    and run no schema-inference job.  Directories are inferred every call.
+    session (``sources.filecache``), and the plan built over it (the
+    relation and, when ordered, ``__idx``) is kept per ``ordered``
+    setting: a later read runs no schema-inference job and gets that plan
+    back with fresh attributes instead of building it again.  Directories
+    are inferred every call.
     """
     df = None
 
@@ -58,11 +66,15 @@ def read_parquet(
         df = spark.read.parquet(path)
         return df.schema
 
+    def typed():
+        # a stored entry without this variant's plan: read with its
+        # schema, no footer job
+        src = df if df is not None else spark.read.schema(schema).parquet(path)
+        return KevinFrame.from_df(src, ordered=ordered).df
+
     key = filecache.version_key(spark, path, "parquet", _SCHEMA_CONFS)
     schema = filecache.infer_once(spark, key, inference)
-    if df is None:  # a stored entry: read with its schema, no footer job
-        df = spark.read.schema(schema).parquet(path)
-    return KevinFrame.from_df(df, ordered=ordered)
+    return KevinFrame.from_df(filecache.plan_once(spark, key, ordered, typed), ordered=ordered)
 
 
 def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:

@@ -13,6 +13,27 @@ from kevinlang_spark.session import get_spark
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def _jvm_commands(monkeypatch, fn) -> int:
+    """Py4J commands Python sends to the JVM while ``fn`` runs, not
+    counting the deletes of Java object proxies that Python's garbage
+    collector sends whenever it happens to run."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    free = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += not command.startswith(free)
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return sent[0]
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -8,6 +8,8 @@ frame it runs its own check job.  Job counts are exact
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -17,7 +19,8 @@ from kevinlang_spark.errors import KevinValueError
 from kevinlang_spark.render import render_frame
 from kevinlang_spark.sources.csv import read_csv
 from kevinlang_spark.sources.parquet import read_parquet
-from test_csv_cache import _jobs, _write
+from conftest import _jvm_commands
+from test_csv_cache import _backdate, _jobs, _write
 
 
 def _top_cities(frame, k: int = 3):
@@ -418,6 +421,73 @@ def test_question_shape_job_counts(spark, simple_csv, regions, shape):
     fresh = _unkept(build(read_csv(spark, simple_csv), dim))
     assert height == (fresh.height() if fresh.pivot else fresh.to_df().count())
     assert text == render_frame(fresh)
+
+
+#: most Py4J commands each question shape sends when its two reads hit the
+#: session's file cache: both reads, the plan, height() and the render.
+#: With PySpark's per-call origin capture on, each read rebuilding its
+#: typed plan and to_df() rebuilt per call, the shapes sent 772
+#: (melt_tail), 462 (take_last), 739 (zip), 518 (top_stores), 696
+#: (append), 853 (store_pair_append), 430 (region_merge) and 662
+#: (year_crosstab); each bound is at most 40 % of that.
+_SHAPE_COMMANDS = {
+    "melt_tail": 270,
+    "take_last": 130,
+    "zip": 275,
+    "top_stores": 155,
+    "append": 240,
+    "store_pair_append": 300,
+    "region_merge": 165,
+    "year_crosstab": 215,
+}
+
+
+@pytest.fixture(scope="module")
+def kept_sources(tmp_path_factory, simple_csv):
+    """simple.csv and a one-file parquet regions dimension, old enough
+    for a read to keep its entry in the session's file cache."""
+    d = tmp_path_factory.mktemp("kept")
+    with open(simple_csv) as fh:
+        csv = _write(d / "simple.csv", fh.read())
+    dim = d / "regions.parquet"
+    pq.write_table(
+        pa.table({"city": ["hangzhou", "shanghai", "beijing"], "region": ["east", "east", "north"]}),
+        dim,
+    )
+    _backdate(dim, 60)
+    return csv, str(dim)
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_question_shape_jvm_commands(spark, monkeypatch, kept_sources, shape):
+    build = _SHAPES[shape][0]
+    csv, dim = kept_sources
+
+    def ask():
+        out = build(read_csv(spark, csv), read_parquet(spark, dim, ordered=True))
+        return out.height(), render_frame(out)
+
+    ask()  # store both files' entries
+    assert _jvm_commands(monkeypatch, ask) <= _SHAPE_COMMANDS[shape]
+
+
+def test_column_sends_no_origin_command(spark, monkeypatch):
+    """``get_spark`` turns off PySpark's per-call origin capture: building
+    a Column sends no ``PySparkCurrentOrigin`` command."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def logging(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", logging)
+        (F.col("a") + 1).alias("b")
+    assert sent and not [c for c in sent if "PySparkCurrentOrigin" in c]
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 # --- pivot_table column order is the render's header order ---

@@ -116,3 +116,28 @@ def test_merge_relational(spark, sf_dir):
     )
     assert out.height() == 25
     assert "r_name" in out.columns
+
+
+@pytest.mark.parametrize("right_ordered", [True, False])
+def test_merge_one_to_many_orders_matches_by_right_row(spark, tmp_path, right_ordered):
+    """The last left key has 3 matches: the right row's index follows
+    ``__idx`` in the merge's order spec, so the order key is unique, the
+    matches keep the right side's order, and a frame Catalyst cannot bound
+    agrees with a bounded one and with one holding its rows on ``init``
+    and ``last`` (the left spec alone made ``init`` drop all 3)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kevinlang_spark.sources.parquet import read_parquet
+
+    pq.write_table(pa.table({"k": [1, 2], "lv": ["x", "y"]}), tmp_path / "l.parquet")
+    pq.write_table(pa.table({"k": [1, 2, 2, 2], "rv": ["a", "b", "c", "d"]}), tmp_path / "r.parquet")
+    left = read_parquet(spark, str(tmp_path / "l.parquet"), ordered=True)
+    right = read_parquet(spark, str(tmp_path / "r.parquet"), ordered=right_ordered)
+    want = [(1, "x", "a"), (2, "y", "b"), (2, "y", "c"), (2, "y", "d")]
+    assert _rows(left.merge(right, on="k")) == want
+    held = left.merge(right, on="k")
+    assert held.height() == 4
+    for frame in (left.merge(right, on="k"), left.merge(right, on="k").take(10), held):
+        assert _rows(frame.init()) == want[:-1]
+        assert _rows(frame.last()) == want[-1:]

@@ -25,6 +25,7 @@ from kevinlang_spark.sources import filecache
 from kevinlang_spark.sources.csv import read_csv
 from kevinlang_spark.sources.parquet import read_parquet
 from kevinlang_spark.traits import KType
+from conftest import _jvm_commands
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -365,3 +366,129 @@ def test_new_session_after_stop_sees_no_old_entries(tmp_path):
     hit, miss = out.stdout.split()[-2:]
     assert hit == "0"
     assert int(miss) > 0  # the same file version, read afresh
+
+
+# --- a hit keeps the typed plan ---
+
+
+def _aged_parquet(path, table) -> str:
+    pq.write_table(table, path)
+    _backdate(path, 60)
+    return str(path)
+
+
+def test_hit_sends_few_commands_and_runs_no_job(spark, monkeypatch, tmp_path):
+    """A hit re-aliases the kept plan instead of rebuilding the relation,
+    its casts and ``__idx``."""
+    csv = _write(tmp_path / "o.csv", "store,year,qty\ns1,2001,3\ns2,2002,4.5\n")
+    pqt = _aged_parquet(tmp_path / "s.parquet", pa.table({"store": ["s1", "s2"], "n": [1, 2]}))
+    for read in (lambda: read_csv(spark, csv), lambda: read_parquet(spark, pqt, ordered=True)):
+        first = read()
+        read()  # the first hit builds nothing new either: the miss kept its plan
+        jobs, hit = _jobs(spark, read)
+        assert jobs == 0
+        assert _jvm_commands(monkeypatch, read) <= 15
+        assert hit.df.schema == first.df.schema
+        assert hit.collect() == first.collect()
+
+
+@pytest.mark.parametrize("source", ["csv", "parquet"])
+def test_two_reads_of_one_file_merge_on_a_column_expression(spark, tmp_path, source):
+    """Each hit has its own attribute ids, so two reads of one file join
+    on ``a.df["k"] == b.df["k"]`` as two files do (a shared plan would
+    make the condition ambiguous)."""
+    if source == "csv":
+        path = _write(tmp_path / "k.csv", "k,v\n1,a\n2,b\n2,c\n")
+        read = lambda: read_csv(spark, path)  # noqa: E731
+    else:
+        table = pa.table({"k": pa.array([1, 2, 2], pa.int64()), "v": ["a", "b", "c"]})
+        path = _aged_parquet(tmp_path / "k.parquet", table)
+        read = lambda: read_parquet(spark, path, ordered=True)  # noqa: E731
+    miss = read()
+    a, b = read(), read()
+    want = [(1, "a", 1, "a"), (2, "b", 2, "b"), (2, "b", 2, "c"), (2, "c", 2, "b"), (2, "c", 2, "c")]
+    for left, right in ((a, b), (miss, a)):
+        merged = left.merge(right, on=left.df["k"] == right.df["k"])
+        assert merged.columns == ["k", "v", "k_r", "v_r"]
+        assert [tuple(r) for r in merged.collect()] == [
+            tuple(float(x) if source == "csv" and i % 2 == 0 else x for i, x in enumerate(w))
+            for w in want
+        ]
+
+
+def test_rewritten_file_gets_a_new_plan(spark, tmp_path):
+    p = tmp_path / "w.csv"
+    path = _write(p, "a,b\n1,x\n2,y\n")
+    read_csv(spark, path)
+    assert [tuple(r) for r in read_csv(spark, path).collect()] == [(1.0, "x"), (2.0, "y")]
+    _write(p, "a,b\n3,z\n", age_s=30)
+    assert [tuple(r) for r in read_csv(spark, path).collect()] == [(3.0, "z")]
+    q = tmp_path / "w.parquet"
+    _aged_parquet(q, pa.table({"a": [1, 2]}))
+    read_parquet(spark, str(q))
+    assert sorted(r["a"] for r in read_parquet(spark, str(q)).collect()) == [1, 2]
+    pq.write_table(pa.table({"a": [7, 8, 9]}), q)
+    os.utime(q, (time.time() - 30, time.time() - 30))
+    assert sorted(r["a"] for r in read_parquet(spark, str(q)).collect()) == [7, 8, 9]
+
+
+def test_strict_read_after_lenient_hit_raises(spark, tmp_path):
+    path = _write(tmp_path / "m.csv", "a,b\n1,x\n,y\n")
+    read_csv(spark, path, strict=False)
+    hit = read_csv(spark, path, strict=False)
+    assert [tuple(r) for r in hit.collect()] == [(1.0, "x"), (None, "y")]
+    with pytest.raises(KevinValueError, match="Invalid data"):
+        read_csv(spark, path)
+
+
+def test_decimal_and_ordered_variants_keep_their_own_plans(spark, tmp_path):
+    path = _write(tmp_path / "v.csv", "name,price\nb,2.25\na,1.10\n")
+    for _ in range(2):  # a miss or first build, then a hit of each variant
+        for decimal in (False, True):
+            for ordered in (True, False):
+                kf = read_csv(spark, path, decimal=decimal, ordered=ordered)
+                want = DecimalType(38, 18) if decimal else DoubleType()
+                assert kf.df.schema["price"].dataType == want
+                assert kf.ordered == ordered
+                assert ("__idx" in kf.df.columns) == ordered
+                if ordered:
+                    assert [r["name"] for r in kf.collect()] == ["b", "a"]
+    q = _aged_parquet(tmp_path / "v.parquet", pa.table({"n": [3, 1, 2]}))
+    for _ in range(2):
+        for ordered in (True, False):
+            kf = read_parquet(spark, q, ordered=ordered)
+            assert kf.ordered == ordered
+            assert ("__idx" in kf.df.columns) == ordered
+            if ordered:
+                assert [r["n"] for r in kf.collect()] == [3, 1, 2]
+
+
+def test_concurrent_hits_keep_one_plan_per_variant(spark, tmp_path):
+    """Threads reading one stored file in every variant: each read gets
+    its variant's types and order, and the entry keeps one plan each."""
+    path = _write(tmp_path / "t.csv", "name,price\nb,2.25\na,1.10\n")
+    read_csv(spark, path)
+    variants = [(d, o) for d in (False, True) for o in (False, True)]
+    wrong, errors = [], []
+
+    def worker(seed: int) -> None:
+        try:
+            for j in range(12):
+                decimal, ordered = variants[(seed + j) % len(variants)]
+                kf = read_csv(spark, path, decimal=decimal, ordered=ordered)
+                want = DecimalType(38, 18) if decimal else DoubleType()
+                if kf.df.schema["price"].dataType != want or kf.ordered != ordered:
+                    wrong.append((decimal, ordered))
+        except Exception as e:  # a race shows as an exception in a thread
+            errors.append(repr(e))
+
+    threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and wrong == []
+    key = filecache.version_key(spark, path, "csv", ("spark.sql.caseSensitive",))
+    assert sorted(filecache._stores[spark][key].plans) == sorted(variants)
+    assert [r["name"] for r in read_csv(spark, path).collect()] == ["b", "a"]

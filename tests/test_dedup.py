@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kevinlang_spark.operators import dedup
+from conftest import _jvm_commands
 
 
 @pytest.fixture(scope="module")
@@ -167,23 +168,6 @@ def test_band_keys_match_column_formula(sig_docs, num_hashes, bands):
     got = _pairs(dedup.band_keys(sig, bands, rows))
     assert len(got) == 41 * bands  # NULL, empty and "!!! ..." have no keys
     assert got == _pairs(_column_band_keys(sig, bands, rows))
-
-
-def _jvm_commands(monkeypatch, fn) -> int:
-    """Py4J commands Python sends to the JVM while ``fn`` runs."""
-    from py4j.clientserver import ClientServerConnection
-
-    sent = [0]
-    send = ClientServerConnection.send_command
-
-    def counting(self, command, *args, **kwargs):
-        sent[0] += 1
-        return send(self, command, *args, **kwargs)
-
-    with monkeypatch.context() as m:
-        m.setattr(ClientServerConnection, "send_command", counting)
-        fn()
-    return sent[0]
 
 
 def test_minhash_plan_build_cost(monkeypatch, sig_docs):
