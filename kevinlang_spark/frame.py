@@ -174,10 +174,11 @@ class KevinFrame:
 
     The first action that fetches every row of ``to_df()`` fixes the
     frame's rows: ``height`` or ``collect`` of at most ``_ROWS_BOUND``
-    rows, or a render of at most ``max_rows``.  Later actions on the same
-    frame read them and run no Spark job, and a source rewritten in
-    between is not read again — as the reference's ``height`` and
-    ``show`` read one in-memory frame (DataFrame.hs:65-172).
+    rows, or a render or Vega-Lite spec (``viz.gen_babel``) of at most
+    ``max_rows``.  Later actions on the same frame read them and run no
+    Spark job, and a source rewritten in between is not read again — as
+    the reference's ``height`` and ``show`` read one in-memory frame
+    (DataFrame.hs:65-172).
 
     A flat frame whose plan bounds its rows (Catalyst's ``maxRows``) at
     ``_ROWS_BOUND`` or fewer is *bounded*, and the positional ops —
@@ -604,27 +605,16 @@ class KevinFrame:
         """Arbitrary host-language fold (reference PolyParam aggregate,
         Combinator.hs:124) as an Arrow-batched grouped-agg pandas UDF.
         ``fold`` receives the group's values as a pandas Series and returns
-        a scalar.
+        a scalar.  Built through ``aggregate_many``, so it checks, orders
+        and labels its output exactly as ``aggregate`` does.
         """
         from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-        if field not in self.columns:
-            raise KevinFieldError("no such field")
-        out_name = alias or field
 
         @pandas_udf(return_type, PandasUDFType.GROUPED_AGG)
         def _fold(v):
             return fold(v)
 
-        if self.group_cols:
-            out = self._df.groupBy(*[_q(k) for k in self.group_cols]).agg(
-                _fold(_q(field)).alias(out_name)
-            )
-        else:
-            out = self._df.agg(_fold(_q(field)).alias(out_name))
-        traits = {k: self.traits[k] for k in self.group_cols if k in self.traits}
-        traits[out_name] = NUM_MEASURE
-        return self._stable_agg_idx(out, traits)
+        return self.aggregate_many([(lambda c, _idx: _fold(c), field, alias)])
 
     def apply_grouped(self, fn, schema: str) -> "KevinFrame":
         """Grouped-map pandas UDF (``applyInPandas``): ``fn(pdf) -> pdf``
@@ -760,12 +750,10 @@ class KevinFrame:
 
     def _bounded_rows(self) -> list | None:
         """The frame's rows: the kept ones, else those of a bounded frame,
-        fetched with one bounded collect and kept.  None for any other
-        frame, which no job has fetched."""
+        fetched with one bounded collect (``_head_rows``) and kept.  None
+        for any other frame, which no job has fetched."""
         if self._rows is None and (m := self._row_bound()) is not None:
-            # limit keeps an ordered fetch a TakeOrderedAndProject; a bare
-            # ordered collect plans a range-partitioned sort
-            self._rows = self.to_df().limit(m).collect()
+            self._head_rows(m)  # at most m rows come back, so all are kept
         return self._rows
 
     def _row_count(self) -> int:
@@ -1470,6 +1458,8 @@ class KevinFrame:
         """The first ``n`` rows of ``to_df()``; a fetch that finds no more
         than ``n`` rows keeps them as the frame's rows."""
         if self._rows is None:
+            # limit keeps an ordered fetch a TakeOrderedAndProject; a bare
+            # ordered collect plans a range-partitioned sort
             rows = self.to_df().limit(n + 1).collect()
             if len(rows) > n:
                 return rows[:n]

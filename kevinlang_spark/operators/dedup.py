@@ -485,9 +485,9 @@ def md5_token_hash(tok: Column) -> Column:
 def simhash(text: Column, bits: int = 64) -> Column:
     """``bits``-bit SimHash of the token multiset, as bigint.
 
-    Per bit position: majority vote of token-hash bits; assembled with a
-    single aggregate over ``sequence(0, bits-1)``.  Pure expression —
-    runs in codegen.
+    Per bit position: majority vote of token-hash bits; one term per bit,
+    unrolled at plan-build time and summed (``simhash_from_hashes``).
+    Pure expression — no UDF.
     """
     return simhash_from_hashes(F.transform(tokenize(text), lambda t: F.xxhash64(t)), bits)
 

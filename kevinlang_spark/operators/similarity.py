@@ -21,6 +21,7 @@ bucketing: pairs are generated within buckets only.
 
 from __future__ import annotations
 
+import itertools
 import math
 import random
 from decimal import ROUND_HALF_UP, Decimal
@@ -95,6 +96,22 @@ def hyperplane_signature(
     return sig
 
 
+def _probe_buckets(
+    query: list[float], planes: list[list[float]], probe_hamming: int
+) -> list[int]:
+    """The query's hyperplane bucket, then every bucket within
+    ``probe_hamming`` bit flips of it (multiprobe), computed driver-side."""
+    qsig = 0
+    for i, p in enumerate(planes):
+        if sum(a * b for a, b in zip(query, p)) >= 0:
+            qsig |= 1 << i
+    probe = [qsig]
+    for n_flips in range(1, probe_hamming + 1):
+        for bits in itertools.combinations(range(len(planes)), n_flips):
+            probe.append(qsig ^ sum(1 << b for b in bits))
+    return probe
+
+
 def ann_topk_lsh(
     df: DataFrame,
     query: list[float],
@@ -113,22 +130,8 @@ def ann_topk_lsh(
     signature (``partitionBy("bucket")``) so probing prunes whole files —
     here the signature is computed on the fly.
     """
-    import itertools
-
     planes = _planes(len(query), n_planes, seed)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(query, p)) >= 0:
-            qsig |= 1 << i
-    # all buckets within probe_hamming bit flips of the query's bucket
-    probe = [qsig]
-    for n_flips in range(1, probe_hamming + 1):
-        for bits in itertools.combinations(range(n_planes), n_flips):
-            flipped = qsig
-            for b in bits:
-                flipped ^= 1 << b
-            probe.append(flipped)
-
+    probe = _probe_buckets(query, planes, probe_hamming)
     bucketed = df.withColumn("__bucket", hyperplane_signature(F.col(vec_col), planes))
     cand = bucketed.where(F.col("__bucket").isin(probe))
     return cosine_topk(cand, query, vec_col, id_col, k)
@@ -259,20 +262,7 @@ def ann_topk_lsh_indexed(
     its multiprobe neighbors driver-side, then read ONLY those partition
     directories (partition pruning — the scan never touches other
     buckets' files)."""
-    import itertools
-
-    planes = _planes(len(query), n_planes, seed)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(query, p)) >= 0:
-            qsig |= 1 << i
-    probe = [qsig]
-    for n_flips in range(1, probe_hamming + 1):
-        for bits in itertools.combinations(range(n_planes), n_flips):
-            flipped = qsig
-            for b in bits:
-                flipped ^= 1 << b
-            probe.append(flipped)
+    probe = _probe_buckets(query, _planes(len(query), n_planes, seed), probe_hamming)
     cand = spark.read.parquet(path).where(F.col("bucket").isin(probe))
     return cosine_topk(cand, query, vec_col, id_col, k)
 
@@ -352,11 +342,7 @@ def knn_join(
     q = queries.select(
         F.col(q_id_col).alias("qid"), F.col(q_vec_col).alias("__qv")
     )
-    rn = l2_norm(F.col(vec_col))
-    qn = l2_norm(F.col("__qv"))
-    sim = F.when((rn == 0) | (qn == 0), F.lit(None)).otherwise(
-        dot(F.col(vec_col), F.col("__qv")) / (rn * qn)
-    )
+    sim = cosine_similarity(F.col(vec_col), F.col("__qv"))
     w = Window.partitionBy("qid").orderBy(
         F.col("__rawsim").desc_nulls_last(), F.col(id_col).asc()
     )
@@ -936,11 +922,7 @@ def hard_negatives(
         F.col(vec_col).alias("__qv"),
         F.col(label_col).alias("__qlabel"),
     )
-    rn = l2_norm(F.col(vec_col))
-    qn = l2_norm(F.col("__qv"))
-    sim = F.when((rn == 0) | (qn == 0), F.lit(None)).otherwise(
-        dot(F.col(vec_col), F.col("__qv")) / (rn * qn)
-    )
+    sim = cosine_similarity(F.col(vec_col), F.col("__qv"))
     w = Window.partitionBy("qid").orderBy(
         F.col("__rawsim").desc_nulls_last(), F.col(id_col).asc()
     )
@@ -1003,10 +985,7 @@ def truncation_recall(
     def topk(d: int) -> DataFrame:
         ev = F.slice(F.col(vec_col), 1, d) if d < full_dim else F.col(vec_col)
         qv = F.slice(F.col("__qv"), 1, d) if d < full_dim else F.col("__qv")
-        rn, qn = l2_norm(ev), l2_norm(qv)
-        sim = F.when((rn == 0) | (qn == 0), F.lit(None)).otherwise(
-            dot(ev, qv) / (rn * qn)
-        )
+        sim = cosine_similarity(ev, qv)
         w = Window.partitionBy("qid").orderBy(
             F.col("__s").desc_nulls_last(), F.col(id_col).asc()
         )

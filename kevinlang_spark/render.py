@@ -75,20 +75,6 @@ def _fmt_header(v) -> str:
     return str(v)
 
 
-def _fmt_cell(v) -> str:
-    """Reference crosstab cell formatting: plain Scientific ``show``
-    (DataFrame.hs:91) — integral floats keep a trailing .0."""
-    if v is None:
-        return "empty"
-    if isinstance(v, float):
-        if math.isnan(v) or math.isinf(v):
-            return str(v)
-        if v == int(v) and abs(v) < 1e15:
-            return f"{v:.1f}"
-        return repr(v)
-    return str(v)
-
-
 def _show_lines(lines: list[list[str]]) -> str:
     if not lines:
         return ""
@@ -153,8 +139,11 @@ def _render_pivot(kf, max_rows: int) -> str:
     ncells = max(len(col_paths), 1)
 
     def vals(i: int) -> list[str]:
+        # cells carry no traits: plain Scientific ``show`` (DataFrame.hs:91)
         row = grid[i] if i < len(grid) else ()
-        return [_fmt_cell(row[j] if j < len(row) else None) for j in range(ncells)]
+        return [
+            _fmt_value(row[j] if j < len(row) else None, None) for j in range(ncells)
+        ]
 
     lines: list[list[str]] = []
     row_hdr_w = len(rows_f) if rows_f else 1

@@ -38,11 +38,12 @@ def get_spark(
     setting, whatever this one says.
     """
     # Python workers must resolve this package regardless of the driver's
-    # cwd (mapInPandas UDFs pickle module-level functions by reference)
+    # cwd (mapInPandas UDFs pickle module-level functions by reference);
+    # added once, and never as an empty entry (which means the cwd)
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    os.environ["PYTHONPATH"] = (
-        pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
-    )
+    path = os.environ.get("PYTHONPATH", "")
+    if pkg_root not in path.split(os.pathsep):
+        os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + path if path else "")
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:

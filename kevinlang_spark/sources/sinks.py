@@ -4,11 +4,8 @@
 - ``write_parquet(partition_by=...)`` → directory partitioning: downstream
   filters on the partition column prune whole directories (partition
   pruning at the file-index level).
-- ``write_bucketed(bucket_by=..., n)`` → hash-bucketed table: two tables
-  bucketed the same way join WITHOUT a shuffle (both sides arrive
-  pre-partitioned), the single biggest cost lever for repeated big-table
-  joins.  Requires a table catalog (``saveAsTable``) because bucket
-  metadata lives in the metastore.
+- hash-bucketed tables, whose joins on the bucket key run WITHOUT a
+  shuffle, are written by ``sources.parquet.write_bucketed``.
 """
 
 from __future__ import annotations
@@ -29,23 +26,6 @@ def write_parquet(
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: list[str],
-    num_buckets: int = 32,
-    sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (optionally sorted) catalog table.  Joining two
-    tables bucketed by the same keys and count skips both shuffle AND sort
-    (sort-merge join reads pre-sorted buckets)."""
-    w = df.write.mode(mode).bucketBy(num_buckets, *bucket_by)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.format("parquet").saveAsTable(table)
 
 
 def salted(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:

@@ -4,8 +4,7 @@ The reference attaches a three-axis trait to every column
 (``FieldTraits = (DataType, DataRole, DataInterpretation)``,
 reference src/Data/DataFrame.hs:71-75) and infers it at CSV ingestion
 (DataFrame.hs:200-242).  We carry the same metadata per column on the
-KevinFrame wrapper and mirror it into ``StructField.metadata`` so it
-survives plain Spark transformations.
+KevinFrame wrapper.
 """
 
 from __future__ import annotations
@@ -49,23 +48,6 @@ class FieldTraits:
     role: DataRole
     interp: DataInterpretation
 
-    def as_metadata(self) -> dict:
-        return {
-            "ktype": self.ktype.value,
-            "role": self.role.value,
-            "interpretation": self.interp.value,
-        }
-
-    @staticmethod
-    def from_metadata(md: dict) -> "FieldTraits | None":
-        if not md or "ktype" not in md:
-            return None
-        return FieldTraits(
-            KType(md["ktype"]),
-            DataRole(md["role"]),
-            DataInterpretation(md["interpretation"]),
-        )
-
 
 TEXT_DIM = FieldTraits(KType.TEXT, DataRole.DIMENSION, DataInterpretation.DISCRETE)
 NUM_DIM = FieldTraits(KType.NUMBER, DataRole.DIMENSION, DataInterpretation.DISCRETE)
@@ -98,4 +80,4 @@ def infer_traits_for_spark_type(name: str, dtype: T.DataType) -> FieldTraits:
             return NUM_DIM
         return NUM_MEASURE
     # arrays/maps/structs/binary: dimension-ish opaque payloads
-    return FieldTraits(KType.TEXT, DataRole.DIMENSION, DataInterpretation.DISCRETE)
+    return TEXT_DIM

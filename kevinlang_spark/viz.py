@@ -18,8 +18,9 @@ Reference surface (all bodies `undefined` there):
 types (Dimension/Discrete → nominal, Measure/Continuous → quantitative,
 DateTime → temporal), Polar coords map to arc marks, ``dodge`` to
 ``xOffset`` grouping, ``stack`` to stacked encodings.  Data is inlined
-from the frame (bounded by ``max_rows`` — a chart is a presentation
-action, like the reference's in-memory renderer).
+from the frame's first ``max_rows`` rows (``KevinFrame._head_rows``, as
+the text render reads them — a chart is a presentation action, like the
+reference's in-memory renderer), so a frame that holds its rows runs no job.
 """
 
 from __future__ import annotations
@@ -199,7 +200,7 @@ def gen_babel(kf, spec: KevinSpec, max_rows: int = 5000) -> dict:
     coord_kind = (spec.kn_coord or Cartesian).kind
     traits_map = dict(kf.traits)
 
-    rows = [r.asDict() for r in kf.to_df().limit(max_rows).collect()]
+    rows = [r.asDict() for r in kf._head_rows(max_rows)]
     vl_mark = _MARK_MAP[mark.kind]
     enc: dict = {}
     if coord_kind == "Polar":

@@ -7,7 +7,8 @@ import math
 
 import pytest
 
-from kevinlang_spark.errors import KevinFieldError, KevinTypeError
+from kevinlang_spark.errors import KevinFieldError, KevinTypeError, KevinValueError
+from kevinlang_spark.traits import TEXT_DIM
 
 SALES = [1060, 5467, 1040, 3245, 1360, 6544, 1807, 5321, 1437, 3218, 2543, 5439, 3211]
 COSTS = [244, 545, 322, 446, 541, 321, 655, 741, 336, 437, 872, 246, 541]
@@ -91,6 +92,31 @@ def test_aggregate_udf_custom_fold(simple_frame):
     by_city = {r["city"]: r["sale_range"] for r in out.collect()}
     assert by_city["hangzhou"] == 6544 - 1040
     assert by_city["beijing"] == 5439 - 3211
+
+
+def test_aggregate_udf_alias_of_group_key_raises(simple_frame):
+    # same check as aggregate: the output would hold two 'city' columns
+    with pytest.raises(KevinValueError, match="duplicate output column 'city'"):
+        simple_frame.groupby("city").aggregate_udf(
+            lambda s: float(s.sum()), "sale", alias="city"
+        )
+
+
+def test_aggregate_udf_string_fold_is_text_dimension(simple_frame):
+    out = simple_frame.groupby("city").aggregate_udf(
+        lambda s: "/".join(sorted(set(s))), "product", return_type="string"
+    )
+    assert out.traits["product"] == TEXT_DIM
+    assert {r["city"]: r["product"] for r in out.collect()}["beijing"] == "CD/mp4"
+
+
+def test_aggregate_udf_orders_like_aggregate(simple_frame):
+    g = simple_frame.groupby(["city", "gender"])
+    udf = g.aggregate_udf(lambda s: float(s.sum()), "sale")
+    builtin = g.aggregate("sum", "sale")
+    assert udf.order_spec == builtin.order_spec
+    assert [n for n, _ in udf.order_spec] == ["city", "gender", "__idx"]
+    assert udf.collect() == builtin.collect()
 
 
 def test_grouped_variance(simple_frame):

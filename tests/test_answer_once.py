@@ -490,6 +490,28 @@ def test_column_sends_no_origin_command(spark, monkeypatch):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_get_spark_adds_package_root_once(spark, monkeypatch):
+    """``get_spark`` puts the package root on ``PYTHONPATH`` once, and
+    never leaves an empty entry, which Python reads as the working
+    directory on every worker's ``sys.path``."""
+    import os
+
+    from pyspark.sql import SparkSession
+
+    from kevinlang_spark.session import get_spark
+
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: spark)
+    get_spark()
+    get_spark()
+    entries = os.environ["PYTHONPATH"].split(os.pathsep)
+    assert len(entries) == 1 and entries[0]
+    monkeypatch.setenv("PYTHONPATH", "/x")
+    get_spark()
+    get_spark()
+    assert os.environ["PYTHONPATH"] == entries[0] + os.pathsep + "/x"
+
+
 # --- pivot_table column order is the render's header order ---
 
 

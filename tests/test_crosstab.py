@@ -15,7 +15,7 @@ from pyspark.errors import SparkRuntimeException
 
 from kevinlang_spark import KevinFrame
 from kevinlang_spark.errors import KevinValueError
-from kevinlang_spark.render import _fmt_cell, render_frame
+from kevinlang_spark.render import _fmt_value, render_frame
 from test_csv_cache import _jobs
 
 MANY = "many values for the same index"
@@ -249,7 +249,7 @@ def test_render_cells_are_pivot_table_rows(spark, shape):
     p = build(spark)
     nr = len(p.pivot.row_fields)
     wide = p.pivot_table().collect()
-    want = [[_fmt_cell(v) for v in list(r)[nr:][:max_rows]] for r in wide[:max_rows]]
+    want = [[_fmt_value(v, None) for v in list(r)[nr:][:max_rows]] for r in wide[:max_rows]]
     if not want or not want[0]:
         want = [["empty"]]  # an empty table renders one empty cell
     got = _body_cells(render_frame(p, max_rows=max_rows), p, len(want[0]))

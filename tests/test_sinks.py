@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from kevinlang_spark.plans import executed_plan
 from kevinlang_spark.sources import sinks
+from kevinlang_spark.sources.parquet import write_bucketed
 
 
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
@@ -26,10 +27,10 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     # warehouse dir is set session-wide in conftest (static conf)
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    sinks.write_bucketed(orders, "orders_b", ["o_custkey"], 8, sort_by=["o_custkey"])
-    sinks.write_bucketed(
+    write_bucketed(orders, "orders_b", ["o_custkey"], 8, sort_cols=["o_custkey"])
+    write_bucketed(
         cust.withColumnRenamed("c_custkey", "o_custkey"), "cust_b", ["o_custkey"], 8,
-        sort_by=["o_custkey"],
+        sort_cols=["o_custkey"],
     )
     a = spark.table("orders_b")
     b = spark.table("cust_b")

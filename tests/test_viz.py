@@ -7,6 +7,7 @@ import pytest
 
 from kevinlang_spark import viz
 from kevinlang_spark.errors import KevinValueError
+from test_csv_cache import _jobs
 
 
 def test_merge_duplicate_coord_errors():
@@ -78,3 +79,17 @@ def test_polar_pie(simple_frame):
 def test_no_mark_errors(simple_frame):
     with pytest.raises(KevinValueError, match="no mark declared"):
         viz.with_frame(simple_frame, viz.Cartesian)
+
+
+def test_vega_lite_reads_kept_rows(spark, simple_frame):
+    """After ``height()`` the frame holds its rows: the spec runs no job and
+    inlines the same rows a fresh frame fetches."""
+    def bars():
+        return simple_frame.groupby("city").aggregate("sum", "sale")
+
+    mark = viz.interval(viz.category("city"), viz.linear("sale"))
+    kept = bars()
+    kept.height()
+    jobs, spec = _jobs(spark, lambda: viz.with_frame(kept, mark))
+    assert jobs == 0
+    assert spec["data"]["values"] == viz.with_frame(bars(), mark)["data"]["values"]
